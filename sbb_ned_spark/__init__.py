@@ -7,7 +7,7 @@ models/sentence_lookup.py, models/decider.py) as three DataFrame stages
 over a table of source-code files:
 
     Stage 1  blocking    — normalized-token + MinHash-LSH blocking keys
-    Stage 2  scoring     — batched pairwise similarity inside applyInPandas
+    Stage 2  scoring     — batched pairwise similarity inside mapInPandas
     Stage 3  clustering  — threshold + large-star/small-star connected components
 
 Everything is declarative DataFrame/SQL first; Python appears only inside

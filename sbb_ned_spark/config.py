@@ -97,9 +97,7 @@ class PipelineConfig:
 
     # --- execution ------------------------------------------------------------
     shuffle_partitions: int = 32
-    salt_buckets: int = 8             # salting fan-out for residual hot keys
     arrow_max_records_per_batch: int = 2048
-    broadcast_threshold_rows: int = 1_000_000  # dims below this get F.broadcast
 
     # --- checkpointing / lineage ----------------------------------------------
     checkpoint_dir: str | None = None  # stage-output table checkpoints (resume)

@@ -7,8 +7,8 @@ title`` rule (`/root/reference/qurator/sbb_ned/models/decider.py:47-48`).
 
 Clustering: iterative **large-star / small-star** connected components
 (Kiveris et al., "Connected Components in MapReduce and Beyond") over the
-accepted edges, expressed purely as DataFrame joins/aggregations with
-``checkpoint()`` per iteration to truncate lineage (SURVEY.md §7.4.3).
+accepted edges, expressed purely as DataFrame windows/aggregations with
+``localCheckpoint()`` per iteration to truncate lineage (SURVEY.md §7.4.3).
 Cluster labels are deterministic min-record-ids, so the output
 ``cluster_id`` is directly comparable to the fixture's ``entity_id``
 (min record id per planted cluster, FIXTURES.md §3).
@@ -163,7 +163,8 @@ def connected_components(
 
     ``records`` needs a ``record_id`` column; ``edges`` needs id_a/id_b.
     Each iteration alternates large-star / small-star and checkpoints to
-    cut lineage; convergence = identical (count, hash) edge fingerprint.
+    cut lineage; convergence = the edge set is a star forest
+    (:func:`_converged_star_form`), tested after every round.
 
     ``id_codec='hex'``: ids are lowercase fixed-width hex digests (the
     pipeline's sha256 record ids) and the LOOP runs on their 32-byte
@@ -221,15 +222,12 @@ def connected_components(
         cur = (
             edges.select("id_a", "id_b").filter(F.col("id_a") != F.col("id_b")).distinct()
         )
-        # materialize the input once: each star pass consumes its input
-        # twice (group-by min + join), which would otherwise re-run the
-        # full scoring lineage on every iteration. eager=True for THIS
-        # first checkpoint only: its first consumer is iteration 1's
-        # star round, whose plan reads the blocks from multiple operators
-        # — lazy blocks would be raced/duplicated there, re-running the
-        # scoring lineage concurrently. The per-iteration checkpoints
-        # below stay lazy because their materializing action is the
-        # single-scan fingerprint aggregate.
+        # materialize the deduplicated input once, so no star round's plan
+        # carries the scoring lineage behind it. eager=True for THIS first
+        # checkpoint only: the scoring lineage then runs in one job of its
+        # own, before iteration 1's window exchanges read the blocks. The
+        # per-iteration checkpoints below stay lazy because their
+        # materializing action is the single-aggregate star-form test.
         cur = cur.localCheckpoint(eager=True)
         n_iter = 0
         every = max(1, config.cc_fingerprint_every)

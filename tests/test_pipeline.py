@@ -92,6 +92,55 @@ def test_unpersist_all_releases_cached_stages(spark, tiny_files):
         assert df.storageLevel == StorageLevel.NONE
 
 
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _light_run_from_clean_cache(spark, files):
+    """run_pipeline(light=True) on an empty cache: an identical plan cached
+    by an earlier test would otherwise be reused with ITS partitioning."""
+    spark.catalog.clearCache()
+    files.persist()
+    res = P.run_pipeline(files, PipelineConfig(), light=True)
+    clusters = sorted((r["record_id"], r["cluster_id"]) for r in res.clusters.collect())
+    return res, clusters
+
+
+def test_coalesced_cached_stages_keep_cluster_partition(spark, tiny_files):
+    """AQE may coalesce the persisted stage outputs; the clusters must be
+    the same partition as with the caches frozen at shuffle_partitions."""
+    prev = spark.conf.get(_CACHED_PARTITIONING)
+    try:
+        spark.conf.set(_CACHED_PARTITIONING, "false")
+        frozen, frozen_clusters = _light_run_from_clean_cache(spark, tiny_files)
+        frozen.unpersist_all()
+        spark.conf.set(_CACHED_PARTITIONING, "true")
+        coalesced, coalesced_clusters = _light_run_from_clean_cache(spark, tiny_files)
+        coalesced.unpersist_all()
+    finally:
+        spark.conf.set(_CACHED_PARTITIONING, prev)
+    assert frozen_clusters == coalesced_clusters
+    assert len(coalesced_clusters) == tiny_files.count()
+
+
+def test_default_session_coalesces_cached_stages(spark, tiny_files):
+    """Under the default session every stage run_pipeline persists is sized
+    to its data, not left at shuffle_partitions output partitions."""
+    res, _ = _light_run_from_clean_cache(spark, tiny_files)
+    try:
+        parts = [df.rdd.getNumPartitions() for df in res.persisted]
+    finally:
+        res.unpersist_all()
+    assert len(parts) == len(P.STAGES)
+    assert all(n < PipelineConfig().shuffle_partitions for n in parts), parts
+
+
+def test_session_keeps_generated_classes_cached(spark):
+    """One ER pass generates ~150 classes; the default 100-entry codegen
+    cache would recompile them on every pass. (``spark`` is built by
+    ``session.get_spark``.)"""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
 def test_features_table_partitioned_by_repo_bucket(spark, tiny_files, tmp_path):
     """The catalog seam writes the features table PARTITIONED BY a bounded
     repo hash bucket (the input_hint table's partition spec)."""
