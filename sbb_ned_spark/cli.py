@@ -30,8 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--threshold", type=float, default=None)
-    ap.add_argument("--scoring-method", default="mapInPandas",
-                    choices=["mapInPandas", "applyInPandas"])
     ap.add_argument("--lineage", action="store_true",
                     help="write per-partition lineage table (needs --checkpoint-dir)")
     ap.add_argument("--incremental", type=float, default=None, metavar="FRAC",
@@ -73,10 +71,10 @@ def main(argv: list[str] | None = None) -> int:
         cut = max(1, min(9, round((1.0 - args.incremental) * 10)))
         h = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10))
         base_files, batch = files.filter(h < cut), files.filter(h >= cut)
-        base = P.run_pipeline(base_files, config, scoring_method=args.scoring_method)
+        base = P.run_pipeline(base_files, config)
         base_wall = time.monotonic() - t0
         t1 = time.monotonic()
-        res = I.incremental_update(batch, config, scoring_method=args.scoring_method)
+        res = I.incremental_update(batch, config)
         res.metrics = base.metrics + res.metrics
         extra = {
             "incremental": args.incremental,
@@ -88,11 +86,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         extra = {}
         res = P.run_pipeline(
-            files,
-            config,
-            resume=args.resume,
-            scoring_method=args.scoring_method,
-            collect_lineage=args.lineage,
+            files, config, resume=args.resume, collect_lineage=args.lineage
         )
     _, members = fixtures.generate_files_pdf(args.scale)
     labeled = spark.createDataFrame(fixtures.generate_labeled_pairs_pdf(members))

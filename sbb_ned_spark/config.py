@@ -78,22 +78,12 @@ class PipelineConfig:
     # exact difflib runs ONLY when the blended score falls within this band
     # of decision_threshold (decision-ambiguous pairs — a small fraction)
     skel_exact_band: float = 0.12
-    prefix_chars: int = 256           # cap for char-level comparisons
 
     # --- Stage 3: decision/clustering ----------------------------------------
     decision_threshold: float = 0.62
+    # every CC round checkpoints and runs the star-form convergence test
+    # (clustering._converged_star_form); this only bounds the round count
     cc_max_iterations: int = 25
-    cc_checkpoint_every: int = 1      # checkpoint() each CC iteration
-    # convergence-check cadence (name kept from the fingerprint era so
-    # config hashes stay meaningful). Round 2 set this to 2 assuming a
-    # converged star round is cheaper than a driver barrier; measured at
-    # bench4/8-cores (round 3, interleaved) the opposite holds: each star
-    # round is 4-5 small shuffles, so checking every round stops at the
-    # true convergence point instead of overshooting — clusters stage
-    # 33.6s -> 23.9/24.8s. Round 6 replaced the fingerprint-equality test
-    # with the structural star-form test (clustering._converged_star_form),
-    # which detects the fixpoint WITHOUT the extra confirm round.
-    cc_fingerprint_every: int = 1
 
     # --- execution ------------------------------------------------------------
     shuffle_partitions: int = 32

@@ -9,7 +9,7 @@ edits, license-header swap, consistent identifier rename, statement
 insert/delete, truncation). Adversarial skew is planted on purpose: one
 license header shared across most files and one vendored utility file
 duplicated across many repos — the hot blocking keys that exercise the
-`max_frequency` cutoff (`index.py:652-653,669-674`) and salting.
+`max_frequency` cutoff (`index.py:652-653,669-674`) and AQE skew-join.
 
 Everything is seeded (seed=42 default); no wall clock, no dict-order
 dependence. Generation is plain numpy/pandas on the driver (fixture

@@ -1,6 +1,7 @@
 """MinHash signatures, LSH band keys, char-trigram profiles.
 
-These are the three Arrow-vectorized pandas-UDF sites of Stage 1 — the
+Two Arrow-vectorized pandas-UDF kernels live here: the fused Stage-1
+feature kernel and the dedup family's shingle-MinHash kernel — the
 analog of the reference's embedding plug-ins
 (`/root/reference/qurator/sbb_ned/embeddings/base.py:12-21`, batched in
 worker processes `base.py:200-231`). Everything operates on whole Arrow
@@ -25,7 +26,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, LongType
 
 _MASK32 = np.uint64(0xFFFFFFFF)
 _SHIFT32 = np.uint64(32)
@@ -159,27 +159,6 @@ def make_shingle_minhash_udf(n_perms: int = 64, n_bands: int = 16, k: int = 3):
     return shingle_minhash
 
 
-def make_minhash_band_udf(n_perms: int = 128, n_bands: int = 32):
-    """pandas UDF: array<bigint> shingle hashes -> array<bigint> band hashes.
-
-    Signature rows are grouped into ``n_bands`` bands of ``n_perms //
-    n_bands`` rows; each band is collapsed to one 63-bit hash. Two records
-    sharing any band hash become blocking-key neighbors (the LSH analog of
-    the reference's Annoy `get_nns_by_vector`, `index.py:667`). The kernel
-    is the whole-batch ``batch_band_sigs`` (one reduceat, no per-row numpy
-    dispatch — measured ~20x on the dedup_minhash_lsh headline).
-    """
-    assert n_perms % n_bands == 0
-    a, b = _perm_params(n_perms)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_bands(shingles: pd.Series) -> pd.Series:
-        sigs = batch_band_sigs(shingles.to_list(), n_perms, n_bands, a, b)
-        return pd.Series(sigs.tolist())
-
-    return minhash_bands
-
-
 def _trigram_counts(s: str, dim: int) -> np.ndarray:
     if not s or len(s) < 3:
         return np.zeros(dim, dtype=np.float32)
@@ -299,28 +278,3 @@ def make_fused_features_udf(
 
     return fused
 
-
-def make_trigram_profile_udf(dim: int = 64):
-    """pandas UDF: normalized content -> L2-normalized hashed char-trigram
-    count vector (array<float>, ``dim`` buckets).
-
-    The cheap 'embedding' of a file — same slot as the reference's anagram
-    char-frequency vector (`embeddings/anagram.py:21-38`: counts / sqrt(sum
-    c^2)). Rolling trigram hash fully vectorized with numpy per batch.
-    """
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def trigram_profile(texts: pd.Series) -> pd.Series:
-        out = []
-        for s in texts:
-            if not s or len(s) < 3:
-                out.append([0.0] * dim)
-                continue
-            arr = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8).astype(np.int64)
-            h = arr[:-2] * 961 + arr[1:-1] * 31 + arr[2:]
-            counts = np.bincount(h % dim, minlength=dim).astype(np.float64)
-            norm = np.sqrt((counts * counts).sum())
-            out.append((counts / norm if norm > 0 else counts).astype(np.float32).tolist())
-        return pd.Series(out)
-
-    return trigram_profile

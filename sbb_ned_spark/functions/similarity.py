@@ -31,25 +31,6 @@ from difflib import SequenceMatcher
 import numpy as np
 
 
-def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
-    """Jaccard of two sorted unique int arrays via merge intersection."""
-    if len(a) == 0 and len(b) == 0:
-        return 1.0
-    if len(a) == 0 or len(b) == 0:
-        return 0.0
-    inter = np.intersect1d(a, b, assume_unique=True).size
-    return inter / (len(a) + len(b) - inter)
-
-
-def containment_sorted(a: np.ndarray, b: np.ndarray) -> float:
-    """|A ∩ B| / min(|A|,|B|) — robust to truncation variants."""
-    m = min(len(a), len(b))
-    if m == 0:
-        return 0.0
-    inter = np.intersect1d(a, b, assume_unique=True).size
-    return inter / m
-
-
 def seq_ratio(a, b, max_seq: int = 400) -> float:
     """difflib ratio over (hashed) token sequences, length-capped."""
     a = list(a[:max_seq]) if a is not None else []
@@ -263,28 +244,3 @@ def batch_jaro_winkler(strs_a, strs_b) -> np.ndarray:
     prefix = (np.cumprod(eqp, axis=1) > 0).sum(axis=1)
     return jaro + 0.1 * prefix * (1.0 - jaro)
 
-
-def combined_score(
-    token_jaccard: float,
-    token_containment: float,
-    skeleton_ratio: float,
-    trigram_cosine: float,
-    size_r: float,
-    w_token: float,
-    w_skel: float,
-    w_cos: float,
-    w_size: float,
-) -> float:
-    """Deterministic blend in [0,1] — the analog of the decider's
-    ``proba_1`` (`models/decider.py:229-258`), replacing the RandomForest
-    with a fixed convex combination (north_star allows threshold rule).
-
-    Token evidence uses max(jaccard, containment·jaccard-floor) so
-    truncation variants aren't double-penalized."""
-    token_ev = max(token_jaccard, 0.7 * token_containment + 0.3 * token_jaccard)
-    return (
-        w_token * token_ev
-        + w_skel * skeleton_ratio
-        + w_cos * trigram_cosine
-        + w_size * size_r
-    )

@@ -166,33 +166,14 @@ def connected_components(
     cut lineage; convergence = the edge set is a star forest
     (:func:`_converged_star_form`), tested after every round.
 
-    ``id_codec='hex'``: ids are lowercase fixed-width hex digests (the
-    pipeline's sha256 record ids) and the LOOP runs on their 32-byte
-    ``unhex`` binary form — bytewise binary order equals the hex string
-    order, so min-labels are unchanged, while every per-iteration
-    shuffle/sort/checkpoint moves half the bytes and the small tail-round
-    star tables drop under the AQE broadcast threshold sooner. Output ids
-    are hexed back; exact round-trip.
-
     ``id_codec='binary'``: edge ids ARRIVE binary (the scoring stage
     already runs on unhexed ids, see ``blocking.blocking_keys``); the
     loop uses them as-is and the output is hexed back to the lowercase
     string form ``records`` uses.
     """
     spark = edges.sparkSession
-    hex_ids = id_codec in ("hex", "binary")
-    if id_codec == "hex":
-        # LOUD contract guard: an id that is not lowercase even-length hex
-        # would silently round-trip wrong (unhex -> NULL, or uppercase ->
-        # lowercased) and corrupt clusters into singletons; fail the job
-        # with a clear message instead. One native expression per edge.
-        from sbb_ned_spark.functions.ids import guarded_unhex
-
-        edges = edges.select(
-            guarded_unhex("id_a", "connected_components(id_codec='hex')").alias("id_a"),
-            guarded_unhex("id_b", "connected_components(id_codec='hex')").alias("id_b"),
-        )
-    elif id_codec == "binary":
+    hex_ids = id_codec == "binary"
+    if hex_ids:
         # Defense-in-depth against a stale pre-binary-refactor checkpoint
         # (ADVICE r4 #2): string ids reaching the binary path would be
         # double-hexed downstream and every record would silently become a
@@ -209,7 +190,7 @@ def connected_components(
                 f"{bad} are not BinaryType ({[types[c].simpleString() for c in bad]}) "
                 "— likely a stale string-id checkpoint from before the "
                 "binary-id refactor; recompute the stage (delete its "
-                "checkpoint) or pass id_codec='hex'."
+                "checkpoint)."
             )
     # the CC loop runs many small jobs over a shrinking edge set; a large
     # shuffle-partition count would pay per-task scheduling for mostly
@@ -230,25 +211,21 @@ def connected_components(
         # materializing action is the single-aggregate star-form test.
         cur = cur.localCheckpoint(eager=True)
         n_iter = 0
-        every = max(1, config.cc_fingerprint_every)
         for i in range(config.cc_max_iterations):
             n_iter = i + 1
             sym = _symmetric(cur)
             after_large = _large_star(sym)
             sym2 = _symmetric(after_large)
-            cur = _small_star(sym2)
-            if config.cc_checkpoint_every and n_iter % config.cc_checkpoint_every == 0:
-                cur = cur.localCheckpoint(eager=False)
+            cur = _small_star(sym2).localCheckpoint(eager=False)
             # the convergence check is a BARRIER (one driver action per
-            # check, which is also the pass that materializes the lazy
+            # round, which is also the pass that materializes the lazy
             # checkpoint above). The structural star-form test stops at
             # the TRUE fixpoint iteration — the old fingerprint-equality
             # check always needed one extra confirm round to see "no
             # change" (measured: n_iter 3 -> 2 on the bench fixtures,
             # saving two window shuffles + a distinct per CC call).
-            if n_iter % every == 0 or n_iter == config.cc_max_iterations:
-                if _converged_star_form(cur):
-                    break
+            if _converged_star_form(cur):
+                break
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 

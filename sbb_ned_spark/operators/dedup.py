@@ -23,6 +23,8 @@ max_frequency rule (`/root/reference/qurator/sbb_ned/index.py:652-653`).
 
 from __future__ import annotations
 
+from hashlib import sha256
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,13 +54,6 @@ def _shingle_array(text_col: str, k: int = 3):
     return F.array_distinct(F.when(n >= k, grams).otherwise(toks))
 
 
-def doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, token) posting list — distinct lowercase whitespace tokens."""
-    return ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"), F.explode(F.array_distinct(_token_array(text_col))).alias("token")
-    )
-
-
 def doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(id, shingle) posting list — distinct token k-gram shingles."""
     return ensure_min_parallelism(df).select(
@@ -77,6 +72,44 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return hashed.join(groups, "text_sha").select("id", "keeper_id", "group_size")
 
 
+def _posting_overlap(posting: DataFrame, key: str, max_key_freq: int | None) -> DataFrame:
+    """(id_a, id_b, n_shared, n_a, n_b) over an (id, ``key``) posting list:
+    ``n_shared`` = distinct keys the pair has in common (id_a < id_b),
+    ``n_a``/``n_b`` = each side's posting size. Only pairs sharing a key
+    are formed — one equi-join on the key, never the cross product.
+
+    ``max_key_freq`` drops keys posted by more than that many ids before
+    the self-join (hot-key skew guard; sizes still count them, so the
+    overlap ratios can only shrink). The posting list has three consumers
+    (sizes, both join sides): an eager localCheckpoint runs its lineage
+    once and lets every consumer read stored blocks — without it the
+    lineage re-ran once per consumer (measured for winnowing at sf0.1:
+    46 s -> 18 s), and a LAZY checkpoint would be raced by the consumers'
+    concurrent subtree jobs (guide §5 caching note).
+    """
+    posting = posting.localCheckpoint(eager=True)
+    sizes = posting.groupBy("id").agg(F.count("*").alias("n"))
+    if max_key_freq is not None:
+        hot = (
+            posting.groupBy(key)
+            .agg(F.count("*").alias("df_"))
+            .filter(F.col("df_") > max_key_freq)
+            .select(key)
+        )
+        posting = posting.join(F.broadcast(hot), key, "left_anti")
+    a = posting.select(F.col("id").alias("id_a"), key)
+    b = posting.select(F.col("id").alias("id_b"), key)
+    inter = (
+        a.join(b, key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_shared"))
+    )
+    return inter.join(
+        sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a"
+    ).join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -92,39 +125,14 @@ def ngram_jaccard_pairs(
     shingles appearing in more than ``max_token_freq`` docs (skew guard;
     correctness unaffected for high tau when paired with verification).
     """
-    # the posting table has THREE consumers (sizes, both join sides);
-    # an eager localCheckpoint runs the shingle lineage once and lets
-    # every consumer read stored blocks — lazy/no checkpoint re-ran it
-    # once per consumer, and a LAZY checkpoint would be raced by the
-    # consumers' concurrent subtree jobs (guide §5 caching note)
-    posting = doc_shingles(df, id_col, text_col, k).localCheckpoint(eager=True)
-    sizes = posting.groupBy("id").agg(F.count("*").alias("n_tok"))
-    if max_token_freq is not None:
-        hot = (
-            posting.groupBy("token")
-            .agg(F.count("*").alias("df_"))
-            .filter(F.col("df_") > max_token_freq)
-            .select("token")
-        )
-        posting = posting.join(F.broadcast(hot), "token", "left_anti")
-    a = posting.select(F.col("id").alias("id_a"), "token")
-    b = posting.select(F.col("id").alias("id_b"), "token")
-    inter = (
-        a.join(b, "token")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
+    out = _posting_overlap(
+        doc_shingles(df, id_col, text_col, k), "token", max_token_freq
+    ).withColumn(
+        "jaccard", F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
     )
-    out = (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_tok").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_tok").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= tau)
+    return out.filter(F.col("jaccard") >= tau).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def winnow_fingerprints(
@@ -151,10 +159,6 @@ def winnow_fingerprints(
     windows padded with uint64-max so truncated slices keep the same
     minima), distinct via np.unique. Measured ~16 s -> ~1 s.
     """
-    from hashlib import sha256 as _hsha256
-
-    import pandas as pd
-
     pad_val = np.uint64(0xFFFFFFFFFFFFFFFF)
 
     @F.pandas_udf("array<bigint>")
@@ -169,14 +173,7 @@ def winnow_fingerprints(
                 sh = ["\x01".join(toks[i : i + k]) for i in range(n - k + 1)]
             else:
                 sh = ["\x01".join(toks)]
-            hs = np.fromiter(
-                (
-                    int(_hsha256(s.encode("utf-8")).hexdigest()[:15], 16)
-                    for s in sh
-                ),
-                dtype=np.uint64,
-                count=len(sh),
-            )
+            hs = _sha60_hashes(sh)
             padded = np.concatenate([hs, np.full(w - 1, pad_val, dtype=np.uint64)])
             wins = np.lib.stride_tricks.sliding_window_view(padded, w).min(axis=1)
             out.append(np.unique(wins).astype(np.int64))
@@ -208,39 +205,12 @@ def containment_pairs(
     ``max_fp_freq`` is the hot-fingerprint skew guard, same contract as
     the Jaccard family's hot-shingle cutoff.
     """
-    # eager checkpoint for the same reason as ngram_jaccard_pairs: the
-    # winnowing kernel is the operator's dominant cost and has three
-    # consumers — measured at sf0.1 it re-ran once per consumer,
-    # 46s -> 18s from this checkpoint alone
-    posting = winnow_fingerprints(df, id_col, text_col, k, w).localCheckpoint(
-        eager=True
+    out = _posting_overlap(
+        winnow_fingerprints(df, id_col, text_col, k, w), "fp", max_fp_freq
+    ).withColumn("containment", F.col("n_shared") / F.least(F.col("n_a"), F.col("n_b")))
+    return out.filter(F.col("containment") >= tau).select(
+        "id_a", "id_b", F.round("containment", 6).alias("containment")
     )
-    sizes = posting.groupBy("id").agg(F.count("*").alias("n_fp"))
-    if max_fp_freq is not None:
-        hot = (
-            posting.groupBy("fp")
-            .agg(F.count("*").alias("df_"))
-            .filter(F.col("df_") > max_fp_freq)
-            .select("fp")
-        )
-        posting = posting.join(F.broadcast(hot), "fp", "left_anti")
-    a = posting.select(F.col("id").alias("id_a"), "fp")
-    b = posting.select(F.col("id").alias("id_b"), "fp")
-    inter = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    out = (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_fp").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_fp").alias("n_b")), "id_b")
-        .withColumn(
-            "containment", F.col("n_shared") / F.least(F.col("n_a"), F.col("n_b"))
-        )
-        .filter(F.col("containment") >= tau)
-    )
-    return out.select("id_a", "id_b", F.round("containment", 6).alias("containment"))
 
 
 def _with_token_set(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
@@ -370,19 +340,6 @@ def batch_simhash(
     return out.astype(np.int64)
 
 
-def make_simhash_udf(bits: int = 64, slab_tokens: int = 1 << 17):
-    """pandas UDF: array<bigint> token hashes -> bigint SimHash (wraps
-    :func:`batch_simhash`)."""
-
-    @F.pandas_udf("long")
-    def simhash(tok_hashes: pd.Series) -> pd.Series:
-        return pd.Series(
-            batch_simhash(list(tok_hashes), len(tok_hashes), bits, slab_tokens)
-        )
-
-    return simhash
-
-
 def _sha60(t):
     """60-bit token hash = first 15 hex chars of sha256, parsed as int.
 
@@ -391,6 +348,18 @@ def _sha60(t):
     SimHash signature — and therefore the whole operator — oracle-checkable
     end to end. Always non-negative (fits in 60 bits)."""
     return F.conv(F.substring(F.sha2(t, 256), 1, 15), 16, 10).cast("long")
+
+
+def _sha60_hashes(strings) -> np.ndarray:
+    """:func:`_sha60` in Python, for the Arrow kernels: uint64 array of
+    the first 15 hex chars of sha256(utf-8 bytes) of each string. The
+    same bytes give the same digests, so kernel output stays equal to
+    the Catalyst/DuckDB formulation."""
+    return np.fromiter(
+        (int(sha256(s.encode("utf-8")).hexdigest()[:15], 16) for s in strings),
+        dtype=np.uint64,
+        count=len(strings),
+    )
 
 
 def simhash_pairs(
@@ -414,8 +383,6 @@ def simhash_pairs(
     contract is unchanged), then the whole-batch :func:`batch_simhash`
     vote kernel. Bit-identical signatures, one Python round-trip.
     """
-    from hashlib import sha256 as _hsha256
-
     k = 3  # _shingle_array's default — the oracle recomputes with k=3
 
     @F.pandas_udf("long")
@@ -434,16 +401,7 @@ def simhash_pairs(
                 )
             else:
                 sh = dict.fromkeys(toks)
-            rows.append(
-                np.fromiter(
-                    (
-                        int(_hsha256(s.encode("utf-8")).hexdigest()[:15], 16)
-                        for s in sh
-                    ),
-                    dtype=np.uint64,
-                    count=len(sh),
-                )
-            )
+            rows.append(_sha60_hashes(sh))
         return pd.Series(batch_simhash(rows, len(tok_s)))
 
     # eager checkpoint: the chunk posting feeds BOTH self-join sides; the

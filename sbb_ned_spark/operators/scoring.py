@@ -5,14 +5,9 @@ The analog of the reference's evidence cross-product + BERT pair scoring
 `models/classifier_decider_queue.py:50-82`): candidate pairs are joined
 with the compact per-record features and scored in Arrow batches.
 
-Two physically different but semantically identical execution modes:
-
-- ``mapInPandas`` (default): scoring is a *stateless per-pair map* — no
-  grouping semantics needed — so the narrow, shuffle-free operator is the
-  Spark-first choice.
-- ``applyInPandas``: pairs are grouped by a deterministic hash bucket of
-  ``id_a`` (north_star phrasing; also the hook for salted repartitioning
-  when pair batches must be co-located with per-candidate state).
+Scoring is a *stateless per-pair map* — no grouping semantics needed —
+so it runs as one narrow, shuffle-free ``mapInPandas`` over the joined
+pairs.
 
 Per-candidate statistical aggregation (the decider's feature matrix,
 `models/decider.py:88-166`) is pure native aggregation — no Python.
@@ -203,30 +198,13 @@ def score_pairs(
     pairs: DataFrame,
     features: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
-    method: str = "mapInPandas",
 ) -> DataFrame:
-    joined = _paired_features(pairs, features)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield _score_batch(pdf, config)
 
-    if method == "mapInPandas":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf):
-                    yield _score_batch(pdf, config)
-
-        return joined.mapInPandas(run, SCORE_SCHEMA)
-
-    if method == "applyInPandas":
-        bucketed = joined.withColumn(
-            "bucket", F.pmod(F.xxhash64("id_a"), F.lit(config.shuffle_partitions))
-        )
-
-        def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_batch(pdf.drop(columns=["bucket"]), config)
-
-        return bucketed.groupBy("bucket").applyInPandas(run_group, SCORE_SCHEMA)
-
-    raise ValueError(f"unknown scoring method: {method}")
+    return _paired_features(pairs, features).mapInPandas(run, SCORE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -172,7 +172,6 @@ def _invalidate_stage(catalog: TableCatalog, spark, stage: str) -> None:
 def incremental_update(
     new_files: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
-    scoring_method: str = "mapInPandas",
 ) -> PipelineResult:
     """Attach ``new_files`` to the checkpointed state in
     ``config.checkpoint_dir`` and return the updated clusters of A ∪ B.
@@ -286,9 +285,7 @@ def incremental_update(
     # restrict the feature side to records that can appear in a delta pair
     ids_a_rel = keys_a.select(F.lower(F.hex("record_id")).alias("record_id")).distinct()
     feats_rel = old_feats.join(ids_a_rel, "record_id", "semi").unionByName(feats_b)
-    scores = timed(
-        "pair_scores", scoring.score_pairs(pairs, feats_rel, config, method=scoring_method)
-    )
+    scores = timed("pair_scores", scoring.score_pairs(pairs, feats_rel, config))
 
     # ---- 5. partial connected components --------------------------------------
     edges_delta = clustering.accepted_edges(scores, config)  # binary ids
@@ -362,11 +359,13 @@ def incremental_update(
     # before any table changes underneath. Crash-consistency (ADVICE r5
     # high): the FIRST durable action marks the clusters manifest
     # invalid, every table mutation happens under that mark (the swap
-    # installs the same invalid manifest with the new data), and the
-    # VALID chain manifests are written LAST (clusters last in
-    # _STATE_CHAIN) — a crash anywhere in between leaves a
-    # present-but-invalid clusters manifest, so ingest_batch neither
-    # bootstraps nor validates: it raises, as documented.
+    # installs the same invalid manifest with the new data), the stale
+    # pair-level stages are invalidated next, and the VALID chain
+    # manifests are written LAST (clusters last in _STATE_CHAIN). So no
+    # valid chain manifest ever coexists with a pre-increment pair-level
+    # stage, and a crash anywhere in between leaves a present-but-invalid
+    # clusters manifest: ingest_batch neither bootstraps nor validates,
+    # it raises, as documented.
     in_progress = {
         "stage": "clusters",
         "invalidated_by": "incremental_update_in_progress",
@@ -378,6 +377,8 @@ def incremental_update(
     catalog.write_table(feats_b, "features", mode="append", partition_by=part_by)
     if membership_new is not None:
         catalog.write_table(membership_new, "exact_groups", mode="append")
+    for stage in ("blocking_keys", "candidate_pairs", "pair_scores"):
+        _invalidate_stage(catalog, spark, stage)
     upstream = None
     for stage in _STATE_CHAIN if config.collapse_exact_dups else _STATE_CHAIN[1:]:
         m = {
@@ -390,8 +391,6 @@ def incremental_update(
         }
         catalog.write_manifest(stage, m)
         upstream = m
-    for stage in ("blocking_keys", "candidate_pairs", "pair_scores"):
-        _invalidate_stage(catalog, spark, stage)
 
     result_clusters = catalog.read_table(spark, "clusters")
     # delta frames are localCheckpoint snapshots, not persist()-cached —

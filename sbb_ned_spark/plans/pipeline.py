@@ -124,7 +124,6 @@ def run_pipeline(
     files: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
     resume: bool = False,
-    scoring_method: str = "mapInPandas",
     collect_lineage: bool = False,
     light: bool = False,
 ) -> PipelineResult:
@@ -345,7 +344,7 @@ def run_pipeline(
     else:
         scores, _ = timed(
             "pair_scores",
-            lambda: scoring.score_pairs(pairs, feats, config, method=scoring_method),
+            lambda: scoring.score_pairs(pairs, feats, config),
             rows_in=n_files,
         )
 

@@ -49,11 +49,7 @@ from sbb_ned_spark.sources.catalog import get_catalog
 from sbb_ned_spark.streaming.events import FILES_DDL
 
 
-def ingest_batch(
-    batch_df: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-    scoring_method: str = "mapInPandas",
-) -> dict:
+def ingest_batch(batch_df: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -> dict:
     """Resolve ONE micro-batch of files into the ER state at
     ``config.checkpoint_dir``; returns a small metrics dict.
 
@@ -90,7 +86,7 @@ def ingest_batch(
                     "incremental_update's state swap; inspect/repair the "
                     "state root instead of bootstrap-overwriting it"
                 )
-        res = P.run_pipeline(batch_df, config, scoring_method=scoring_method)
+        res = P.run_pipeline(batch_df, config)
         n = next(
             (m["rows_out"] for m in res.metrics if m["stage"] == "clusters"), None
         )
@@ -104,7 +100,7 @@ def ingest_batch(
     fresh = batch.join(seen, "record_id", "anti")
     if fresh.limit(1).isEmpty():
         return {"mode": "replay_noop", "batch_rows_dropped": batch.count()}
-    res = I.incremental_update(fresh, config, scoring_method=scoring_method)
+    res = I.incremental_update(fresh, config)
     return {"mode": "incremental", "stages": res.metrics}
 
 
@@ -113,7 +109,6 @@ def stream_resolve(
     landing_dir: str,
     config: PipelineConfig,
     stream_ckpt_dir: str,
-    scoring_method: str = "mapInPandas",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
 ):
@@ -131,9 +126,7 @@ def stream_resolve(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(landing_dir)
     writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, _bid: ingest_batch(df, config, scoring_method)
-        )
+        stream.writeStream.foreachBatch(lambda df, _bid: ingest_batch(df, config))
         .option("checkpointLocation", stream_ckpt_dir)
     )
     if available_now:

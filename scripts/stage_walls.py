@@ -21,16 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     cpus = int(sys.argv[1])
     scale = sys.argv[2] if len(sys.argv) > 2 else "bench4"
-    fp_every = int(sys.argv[3]) if len(sys.argv) > 3 else None
     from sbb_ned_spark.config import PipelineConfig
     from sbb_ned_spark.plans import pipeline as P
     from sbb_ned_spark.session import get_spark
 
-    kw = {} if fp_every is None else {"cc_fingerprint_every": fp_every}
     config = PipelineConfig(
         shuffle_partitions=max(32, cpus * 2),
         extra_spark_conf={"spark.driver.memory": f"{4 * cpus}g"},
-        **kw,
     )
     spark = get_spark(f"stage-walls-{cpus}", master=f"local[{cpus}]", config=config)
     files = spark.read.parquet(f"/root/repo/.bench_data/files_{scale}.parquet")

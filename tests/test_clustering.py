@@ -44,48 +44,6 @@ def test_duplicate_and_reversed_edges(spark):
     assert set(got.values()) == {"a"}
 
 
-def test_hex_codec_equals_string_codec(spark):
-    """id_codec='hex' must produce byte-identical clusters to the string
-    path: binary order of unhex(id) == hex string order for fixed-width
-    lowercase hex ids, and the output is hexed back losslessly."""
-    import hashlib
-
-    ids = [hashlib.sha256(bytes([i])).hexdigest() for i in range(24)]
-    s = sorted(ids)
-    # chains, a triangle, reversed/duplicate edges, isolated nodes
-    edges = (
-        [(s[i], s[i + 1]) for i in range(0, 10)]
-        + [(s[12], s[13]), (s[13], s[14]), (s[14], s[12])]
-        + [(s[16], s[15]), (s[16], s[15])]
-    )
-    e = spark.createDataFrame(edges, ["id_a", "id_b"])
-    n = spark.createDataFrame([(x,) for x in s], ["record_id"])
-    base = {
-        r["record_id"]: r["cluster_id"]
-        for r in connected_components(e, n, PipelineConfig()).collect()
-    }
-    hexed = {
-        r["record_id"]: r["cluster_id"]
-        for r in connected_components(e, n, PipelineConfig(), id_codec="hex").collect()
-    }
-    assert base == hexed
-    assert set(base) == set(s)
-
-
-def test_hex_codec_rejects_non_hex_ids_loudly(spark):
-    """A caller-supplied id that is not lowercase even-length hex must
-    FAIL the job with a clear message — never silently become NULL edges
-    and singleton clusters."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    e = spark.createDataFrame([("r001", "r002")], ["id_a", "id_b"])
-    n = spark.createDataFrame([("r001",), ("r002",)], ["record_id"])
-    with pytest.raises(Exception) as ei:
-        connected_components(e, n, PipelineConfig(), id_codec="hex").collect()
-    assert "not lowercase hex" in str(ei.value)
-
-
 def test_binary_codec_rejects_string_edges_loudly(spark):
     """A stale pre-binary-refactor checkpoint (string id columns) fed to
     the binary path would be double-hexed into silent all-singleton

@@ -194,6 +194,39 @@ def test_crash_between_swap_and_appends_fails_loudly(spark, tiny_files, tmp_path
         er_ingest.ingest_batch(b, cfg)
 
 
+def test_pair_stages_invalid_before_valid_chain_manifests(
+    spark, tiny_files, tmp_path, monkeypatch
+):
+    """Crash instant: the first VALID chain manifest (features or
+    exact_groups) must only be written once the pre-increment pair-level
+    stages are already invalid — otherwise a crash right there leaves a
+    valid chain next to candidate_pairs/pair_scores of the old corpus."""
+    from sbb_ned_spark.sources.catalog import ParquetCatalog, get_catalog
+
+    a, b = _split(tiny_files, 10, 7)
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
+    P.run_pipeline(a, cfg)
+    catalog = get_catalog(spark, cfg.checkpoint_dir)
+    pair_stages = ("blocking_keys", "candidate_pairs", "pair_scores")
+    assert all("config_hash" in catalog.read_manifest(s) for s in pair_stages)
+
+    orig = ParquetCatalog.write_manifest
+
+    def crash_on_valid_chain(self, name, manifest):
+        if name in ("features", "exact_groups") and "config_hash" in manifest:
+            raise RuntimeError("simulated crash before the valid chain manifests")
+        return orig(self, name, manifest)
+
+    monkeypatch.setattr(ParquetCatalog, "write_manifest", crash_on_valid_chain)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        I.incremental_update(b, cfg)
+    monkeypatch.undo()
+
+    for s in pair_stages:
+        m = catalog.read_manifest(s)
+        assert "config_hash" not in m and m["invalidated_by"] == "incremental_update", s
+
+
 def test_ingest_refuses_bootstrap_over_swap_artifacts(spark, tiny_files, tmp_path):
     """ADVICE r5 medium: the between-renames window of _replace_table can
     leave no clusters dir but always leaves a manifest-bearing

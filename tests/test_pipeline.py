@@ -238,6 +238,27 @@ def test_no_per_row_python_udfs():
         assert "@udf" not in src, py
 
 
+def test_every_config_field_is_read():
+    """No config field that nothing reads: each PipelineConfig field must
+    appear as ``config.<name>`` or ``cfg.<name>`` somewhere in the package
+    outside config.py. An unread field still changes ``_config_hash`` and
+    so invalidates checkpoints for a setting that does nothing."""
+    import dataclasses
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).parent.parent / "sbb_ned_spark"
+    src = "\n".join(
+        py.read_text() for py in pkg.rglob("*.py") if py.name != "config.py"
+    )
+    unread = [
+        f.name
+        for f in dataclasses.fields(PipelineConfig)
+        if not re.search(rf"\b(?:config|cfg)\.{f.name}\b", src)
+    ]
+    assert unread == []
+
+
 # ---------------------------------------------------------------------------
 # Recall budget (VERDICT r3 ask #5): two rounds of speed-driven hash/band
 # changes spent bench recall 0.99905 -> 0.99814 against the 0.99 gate.

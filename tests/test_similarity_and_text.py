@@ -258,219 +258,3 @@ def test_ivf_codebook_deterministic(spark):
     c2 = ss.train_ivf_centroids(v)
     assert np.array_equal(c1, c2)
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
-
-
-def test_streaming_stateful_dedup_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state must survive ACROSS micro-batches —
-    a content first seen in batch 1 arriving again in batch 2 (same
-    checkpoint) is tagged first_seen=False."""
-    from sbb_ned_spark.streaming.stateful import streaming_exact_dedup
-
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "record_id string, content string"
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    batch1 = [("a", "alpha"), ("b", "beta"), ("c", "alpha")]  # c dups a in-batch
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(src)
-    drain()
-    batch2 = [("d", "alpha"), ("e", "gamma"), ("f", "beta")]  # d,f dup batch 1
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(src)
-    drain()
-
-    got = {r["record_id"]: r["first_seen"] for r in spark.read.parquet(out).collect()}
-    assert got == {"a": True, "b": True, "c": False, "d": False, "e": True, "f": False}
-
-
-def test_streaming_near_dup_across_batches(spark, tmp_path):
-    """MinHash-band stateful near-dup (VERDICT r4 ask #8): a document
-    near-identical to one ingested in an EARLIER micro-batch must come
-    out matched (band-key state survives the restart), unrelated text
-    must not, and within-batch the min-record_id copy is the keeper."""
-    from sbb_ned_spark.streaming.stateful import (
-        collapse_band_flags,
-        streaming_near_dup,
-    )
-
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "record_id string, content string"
-    base = " ".join(f"tok{i}" for i in range(40))
-    near = base.replace("tok7", "changed")          # jaccard ~0.9 vs base
-    other = " ".join(f"zzz{i}" for i in range(40))  # unrelated
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming_near_dup(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # batch 1: c is a near-dup of a IN-batch; b unrelated
-    spark.createDataFrame(
-        [("a", base), ("b", other), ("c", near)], schema
-    ).write.mode("append").parquet(src)
-    drain()
-    # batch 2 (fresh query, same checkpoint): d near-dups batch-1 content;
-    # e is new
-    more = " ".join(f"qqq{i}" for i in range(40))
-    spark.createDataFrame([("d", near), ("e", more)], schema).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-
-    flags = {
-        r["record_id"]: (r["near_dup"], r["n_matched_bands"])
-        for r in collapse_band_flags(spark.read.parquet(out)).collect()
-    }
-    assert flags["a"][0] is False            # first ever
-    assert flags["b"][0] is False            # unrelated
-    assert flags["c"][0] is True             # in-batch near-dup of a
-    assert flags["d"][0] is True             # cross-batch (state survived)
-    assert flags["d"][1] == 16               # identical to c -> every band
-    assert flags["e"][0] is False
-
-
-def test_bloom_positions_one_sided():
-    """Bloom kernel math: inserted hashes are ALWAYS found afterwards
-    (no false negatives, the one-sided contract) and the probe layout is
-    deterministic; false-positive rate on fresh keys stays near the
-    analytic (1-e^(-kn/m))^k."""
-    import numpy as np
-
-    from sbb_ned_spark.streaming.stateful import _bloom_positions
-
-    m_bits, k = 1 << 14, 7
-    rng = np.random.default_rng(11)
-    ins = rng.integers(-2**63, 2**63 - 1, size=1000, dtype=np.int64)
-    w, b = _bloom_positions(ins, m_bits, k)
-    w2, b2 = _bloom_positions(ins, m_bits, k)
-    assert np.array_equal(w, w2) and np.array_equal(b, b2)
-    words = np.zeros(m_bits // 64, dtype=np.uint64)
-    np.bitwise_or.at(words, w.ravel(), np.uint64(1) << b.ravel())
-    assert ((words[w] >> b) & np.uint64(1)).astype(bool).all()
-    probe = rng.integers(-2**63, 2**63 - 1, size=20000, dtype=np.int64)
-    pw, pb = _bloom_positions(probe, m_bits, k)
-    fp = ((words[pw] >> pb) & np.uint64(1)).astype(bool).all(axis=1).mean()
-    expect = (1 - np.exp(-k * len(ins) / m_bits)) ** k
-    assert fp < 4 * expect + 0.01
-
-
-def test_streaming_dedup_bloom_state_across_batches(spark, tmp_path):
-    """state_mode='bloom': fixed-size per-bucket state, same verdicts as
-    exact mode on this fixture (fp prob ~1e-12 at 6 hashes in 2^16 bits),
-    surviving a restart."""
-    from sbb_ned_spark.streaming.stateful import streaming_exact_dedup
-
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "record_id string, content string"
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming_exact_dedup(stream, state_mode="bloom", bloom_bits=1 << 16)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(
-        [("a", "alpha"), ("b", "beta"), ("c", "alpha")], schema
-    ).write.mode("append").parquet(src)
-    drain()
-    spark.createDataFrame(
-        [("d", "alpha"), ("e", "gamma"), ("f", "beta")], schema
-    ).write.mode("append").parquet(src)
-    drain()
-
-    got = {r["record_id"]: r["first_seen"] for r in spark.read.parquet(out).collect()}
-    assert got == {"a": True, "b": True, "c": False, "d": False, "e": True, "f": False}
-
-
-def test_streaming_state_mode_validation(spark):
-    import pytest as _pytest
-
-    from sbb_ned_spark.streaming.stateful import _state_kernel
-
-    with _pytest.raises(ValueError, match="state_mode"):
-        _state_kernel("dedup", "lossy", 1 << 20, 7)
-    with _pytest.raises(ValueError, match="power of two"):
-        _state_kernel("dedup", "bloom", 1000, 7)
-
-
-def test_streaming_state_mode_tag_rejects_cross_mode_restore():
-    """A checkpoint written under a different state_mode/bloom_bits/bloom_k
-    must fail loudly in BOTH directions — the element-0 mode tag prevents
-    a seen-hash list being reinterpreted as Bloom filter words AND filter
-    words being reinterpreted as seen hashes."""
-    import numpy as np
-    import pandas as pd
-    import pytest as _pytest
-
-    from sbb_ned_spark.streaming.stateful import _state_kernel, _state_tag
-
-    class FakeState:
-        def __init__(self, stored):
-            self.exists = True
-            self.get = (stored,)
-            self.updated = None
-
-        def update(self, v):
-            self.updated = v
-
-    batch = pd.DataFrame({"record_id": ["a"], "sha64": [42]})
-
-    exact_state = [int(_state_tag(0, 7)), 11, 22, 33]
-    bloom_state = [int(_state_tag(1 << 16, 7))] + [0] * ((1 << 16) // 64)
-
-    # cross-mode restores: loud, state untouched
-    for kernel, stored in [
-        (_state_kernel("dedup", "bloom", 1 << 16, 7), exact_state),
-        (_state_kernel("dedup", "exact", 1 << 16, 7), bloom_state),
-        # sizing change within bloom mode is also a tag mismatch
-        (_state_kernel("dedup", "bloom", 1 << 18, 7), bloom_state),
-        (_state_kernel("dedup", "bloom", 1 << 16, 5), bloom_state),
-        # legacy untagged state (pre-tag checkpoints): loud too
-        (_state_kernel("dedup", "exact", 1 << 16, 7), [11, 22, 33]),
-    ]:
-        st = FakeState(stored)
-        with _pytest.raises(ValueError, match="state_mode"):
-            list(kernel(("bucket",), iter([batch]), st))
-        assert st.updated is None
-
-    # same-mode restores still work and re-tag on update
-    for kernel, stored in [
-        (_state_kernel("dedup", "exact", 1 << 16, 7), exact_state),
-        (_state_kernel("dedup", "bloom", 1 << 16, 7), bloom_state),
-    ]:
-        st = FakeState(stored)
-        out = pd.concat(list(kernel(("bucket",), iter([batch]), st)))
-        assert bool(out["first_seen"][0]) is True  # 42 not in state
-        assert st.updated[0][0] == stored[0]  # tag preserved at position 0
-        assert any(np.asarray(st.updated[0][1:], dtype=np.int64))  # state grew/set bits
