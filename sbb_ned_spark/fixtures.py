@@ -303,14 +303,11 @@ def load_files_df(spark, scale: str = "tiny", seed: int = 42):
     """files as a Spark DataFrame (parquet-backed, see
     :func:`ensure_files_parquet`) with the derived per-row invariant columns
     (record_id, sha256 — input_hint; hashing precedent `webapp/app.py:289-291`)."""
-    from pyspark.sql import functions as F
-
     from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
+    from sbb_ned_spark.operators.blocking import with_ids
 
     # the fixture parquet is one row group -> 1 scan partition; without
-    # the fan-out every per-row sha256 below (and the whole features
-    # stage) would run on one core
+    # the fan-out every per-row sha256 (and the whole features stage)
+    # would run on one core
     df = ensure_min_parallelism(spark.read.parquet(ensure_files_parquet(scale, seed)))
-    return df.withColumn(
-        "record_id", F.sha2(F.concat_ws("\x1f", "repo", "path", "commit"), 256)
-    ).withColumn("sha256", F.sha2(F.col("content"), 256))
+    return with_ids(df)

@@ -35,6 +35,21 @@ US = "\x1f"
 MAX_SKELETON_SEQ = 200
 
 
+def with_ids(files: DataFrame) -> DataFrame:
+    """Add the per-row identity columns a caller did not supply (input_hint):
+    ``record_id`` = sha256 of (repo, path, commit) joined by US, and
+    ``sha256`` of the content. Cheap JVM-side hashes, no feature
+    extraction. :func:`sbb_ned_spark.fixtures.record_id` is the
+    pure-Python reference for the id."""
+    if "record_id" not in files.columns:
+        files = files.withColumn(
+            "record_id", F.sha2(F.concat_ws(US, "repo", "path", "commit"), 256)
+        )
+    if "sha256" not in files.columns:
+        files = files.withColumn("sha256", F.sha2(F.col("content"), 256))
+    return files
+
+
 def record_features(files: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """One pass over `files` producing the compact per-record feature row.
 
@@ -58,15 +73,7 @@ def record_features(files: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -
         max_skeleton=MAX_SKELETON_SEQ,
     )
 
-    df = files
-    if "record_id" not in df.columns:
-        df = df.withColumn(
-            "record_id", F.sha2(F.concat_ws(US, "repo", "path", "commit"), 256)
-        )
-    if "sha256" not in df.columns:
-        df = df.withColumn("sha256", F.sha2(F.col("content"), 256))
-
-    df = with_normalized_columns(df, "content", min_len=config.min_token_len)
+    df = with_normalized_columns(with_ids(files), "content", min_len=config.min_token_len)
     return df.select(
         "record_id",
         "repo",

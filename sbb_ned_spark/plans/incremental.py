@@ -10,25 +10,15 @@ share blocking evidence with B — never |A|²:
 1. exact adoption  — B records byte-identical to an old representative
    join that representative's sha-group outright (no features, no pairs);
    the remaining B rows collapse among themselves (stage-0 semantics).
-2. delta blocking  — blocking keys are re-derived for the new reps and,
-   for the OLD side, from the compact features checkpoint restricted by a
-   semi-join to keys that occur in B (a narrow columnar scan of A's
-   features + one key-shuffle of the matching slice; the checkpointed
-   cold posting can't be reused — it dropped A-singleton keys, exactly
-   the keys a B record can newly pair with). Hot-key and pairable cuts
-   run on the union slice: for every key present in B its union frequency
-   is complete, and keys absent from B can only form old-old pairs, which
-   are already baked into the state.
-3. delta pairs     — ``candidate_pairs(delta_flag=...)``: old-old pairs
-   are dropped before the first pair exchange; caps/tie-breaks are the
-   standard ones applied to the delta stream.
-4. delta scoring   — the ordinary Stage-2 kernel over delta pairs, with
-   the feature side pre-restricted to records that can appear in them.
-5. partial CC      — ONLY clusters touched by an accepted delta edge are
-   re-solved: their membership re-enters as star edges (root, member) —
-   the transitive closure of A's accepted edges — unioned with the delta
-   edges; untouched clusters pass through unchanged. The star input is
-   already near-converged, so the CC loop spends O(1) rounds on it.
+2-5. the shared chain — :func:`~sbb_ned_spark.plans.pipeline.resolve`,
+   the same stage code ``run_pipeline`` runs, with the old state as its
+   ``prior``: delta blocking (the old side's keys, re-derived from the
+   features table and semi-joined to the keys B holds), delta pairs
+   (``candidate_pairs(delta_flag="is_new")`` drops old-old pairs before
+   the first pair exchange), delta scoring (the feature side restricted
+   to records in a delta pair), and partial CC (only clusters an accepted
+   delta edge touches re-enter, as star edges; the rest pass through).
+   Each delta stage is an eager ``localCheckpoint`` snapshot.
 6. state update    — features and exact-dup membership are APPENDED,
    clusters is atomically replaced, and the pair-level stage manifests
    are invalidated (their tables describe A only). A later full
@@ -43,10 +33,12 @@ Semantics vs a full rebuild: identical whenever the blocking caps don't
 bind differently across the increment (the per-record candidate cap and
 the hot-key cutoff see delta-stream frequencies; scores themselves are
 deterministic per pair). tests/test_incremental.py asserts EXACT cluster
-equality against the full rebuild on the fixtures, and the drift-bound
-story at scale is the standard one: periodic full rebuild, documented in
-SCALE.md. The reference has no incremental path at all — its lookup
-re-queries the whole Annoy index per batch
+equality against the full rebuild on the fixtures and, in
+``test_incremental_property_equals_rebuild``, on drawn splits, chained
+increments and configs (exact-dup collapse on/off, bucketed features);
+the drift-bound story at scale is the standard one: periodic full
+rebuild, documented in SCALE.md. The reference has no incremental path
+at all — its lookup re-queries the whole Annoy index per batch
 (`/root/reference/qurator/sbb_ned/index.py:652-719`).
 """
 
@@ -62,33 +54,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
-from sbb_ned_spark.operators import blocking, clustering, scoring
+from sbb_ned_spark.operators.blocking import with_ids
 from sbb_ned_spark.plans.pipeline import (
-    STAGE_FORMAT_VERSION,
+    STAGES,
     PipelineResult,
+    Prior,
     _config_hash,
+    _duplicate_id,
+    _expand_members,
+    _manifest,
     _valid_manifest,
-    _with_ids,
+    resolve,
 )
-from sbb_ned_spark.sources.catalog import (
-    IcebergCatalog,
-    ParquetCatalog,
-    TableCatalog,
-    get_catalog,
-    manifest_digest,
-)
+from sbb_ned_spark.sources.catalog import ParquetCatalog, TableCatalog, get_catalog
 
 # the chain an incremental update leaves behind (pair-level stages are
 # invalidated — they describe the PRE-increment corpus)
 _STATE_CHAIN = ("exact_groups", "features", "clusters")
-_FULL_CHAIN = (
-    "exact_groups",
-    "features",
-    "blocking_keys",
-    "candidate_pairs",
-    "pair_scores",
-    "clusters",
-)
 
 
 def _validate_state(catalog: TableCatalog, config: PipelineConfig) -> None:
@@ -97,17 +79,13 @@ def _validate_state(catalog: TableCatalog, config: PipelineConfig) -> None:
     Walks manifests with the same chained-digest rule resume uses — a
     stale or mixed-config state fails loudly here, before any compute."""
     cfg_hash = _config_hash(config)
-    for chain in (_STATE_CHAIN, _FULL_CHAIN):
-        stages = chain if config.collapse_exact_dups else chain[1:]
+    for chain in (_STATE_CHAIN, STAGES):
         upstream = None
-        ok = True
-        for stage in stages:
-            m = _valid_manifest(catalog, stage, cfg_hash, upstream)
-            if m is None:
-                ok = False
+        for stage in chain if config.collapse_exact_dups else chain[1:]:
+            upstream = _valid_manifest(catalog, stage, cfg_hash, upstream)
+            if upstream is None:
                 break
-            upstream = m
-        if ok:
+        else:
             return
     raise ValueError(
         "incremental_update: no valid prior state under "
@@ -131,13 +109,9 @@ def _replace_table(
     the caller's in-progress INVALID manifest — is pre-written into the
     STAGED directory so the post-swap table carries it in the same
     rename as the data, and the swap is rename-aside
-    (``mv dst dst__old; mv staged dst; rm dst__old``) instead of
-    rmtree-then-replace: a manifest-bearing directory now exists at
-    every instant except the microseconds between the two renames (the
-    old code's manifest-less window lasted a whole recursive delete, and
-    it then RESTORED the old still-valid manifest over the new data —
-    a crash before the caller's follow-up appends left a VALID-looking
-    but inconsistent state). The between-renames window is closed by the
+    (``mv dst dst__old; mv staged dst; rm dst__old``): a
+    manifest-bearing directory exists at every instant except the
+    microseconds between the two renames. That window is closed by the
     consumer side: ``er_ingest.ingest_batch`` refuses to bootstrap while
     a ``<name>__old`` / ``<name>__staged`` manifest exists."""
     if isinstance(catalog, ParquetCatalog):
@@ -188,7 +162,7 @@ def incremental_update(
     cfg_hash = _config_hash(config)
     metrics: list[dict] = []
 
-    def timed(stage: str, df: DataFrame) -> DataFrame:
+    def stage(name: str, build, partition_by: tuple = ()) -> DataFrame:
         # snapshot each delta stage with an EAGER localCheckpoint (all are
         # |delta|-sized). persist() is not enough: the state update at the
         # end APPENDS to the features table, and Spark's post-write path
@@ -198,10 +172,15 @@ def incremental_update(
         # and the whole delta collapses to empty). The checkpoint cuts the
         # file lineage, so the returned frames are immutable snapshots.
         t0 = time.monotonic()
+        df = build()
+        if name == "blocking_keys":
+            # the delta posting stays lazy: candidate_pairs is its only
+            # reader, and snapshotting it measured slower
+            return df[0]
         df = df.localCheckpoint(eager=True)
         n = df.count()
         metrics.append(
-            {"stage": f"delta_{stage}", "rows_out": n,
+            {"stage": f"delta_{name}", "rows_out": n,
              "wall_ms": int((time.monotonic() - t0) * 1000)}
         )
         return df
@@ -209,7 +188,7 @@ def incremental_update(
     old_feats = catalog.read_table(spark, "features")
     old_clusters = catalog.read_table(spark, "clusters")
 
-    batch = _with_ids(new_files)
+    batch = with_ids(new_files)
     # loud id-space guard (mirrors run_pipeline's validate_unique_ids):
     # a batch id colliding with an old id would silently merge two
     # different records' feature rows downstream
@@ -227,21 +206,15 @@ def incremental_update(
     # in-batch duplicate ids would fan out through adoption/membership into
     # duplicate cluster rows (run_pipeline's stage-0 window guard does not
     # run here). Always-on — a batch is delta-sized, the bare-id agg is cheap.
-    dup = (
-        batch.select("record_id")
-        .groupBy("record_id")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
+    if dup := _duplicate_id(batch):
         raise ValueError(
-            f"incremental_update: duplicate record_id in batch: {dup[0]['record_id']}"
+            f"incremental_update: duplicate record_id in batch: {dup['record_id']}"
         )
 
     # ---- 1. exact adoption + in-batch collapse ------------------------------
     membership_new: DataFrame | None = None
+    finish = None
+    reps, rep_assign = batch, old_clusters
     if config.collapse_exact_dups:
         adopted = batch.join(
             old_feats.select("sha256", F.col("record_id").alias("rep_id")), "sha256"
@@ -249,112 +222,48 @@ def incremental_update(
         fresh = batch.join(
             old_feats.select("sha256"), "sha256", "anti"
         ).withColumn("rep_id", F.min("record_id").over(Window.partitionBy("sha256")))
-        membership_new = timed(
+        membership_new = stage(
             "exact_groups",
-            adopted.unionByName(fresh.select("record_id", "rep_id")),
+            lambda: adopted.unionByName(fresh.select("record_id", "rep_id")),
         )
-        b_reps = fresh.filter(F.col("record_id") == F.col("rep_id")).drop("rep_id")
-    else:
-        b_reps = batch
-
-    # ---- 2-3. delta blocking + pairs ----------------------------------------
-    feats_b_raw = blocking.record_features(b_reps, config)
-    if config.features_partition_buckets:
-        # keep schema parity with the stored features table (its append
-        # below would otherwise fail on the missing bucket column)
-        feats_b_raw = feats_b_raw.withColumn(
-            "repo_bucket",
-            F.pmod(F.xxhash64("repo"), F.lit(config.features_partition_buckets)),
-        )
-    feats_b = timed("features", feats_b_raw)
-    keys_b = blocking.blocking_keys(feats_b, config).withColumn("is_new", F.lit(True))
-    keys_a = (
-        blocking.blocking_keys(old_feats, config)
-        # only keys that occur in B can form a NEW pair; the semi-join
-        # restricts the A-side shuffle to that slice (AQE broadcasts the
-        # B key set when it fits)
-        .join(keys_b.select("key").distinct(), "key", "semi")
-        .withColumn("is_new", F.lit(False))
-    )
-    cold, _hot = blocking.split_hot_keys(keys_a.unionByName(keys_b), config)
-    pairs = timed(
-        "candidate_pairs", blocking.candidate_pairs(cold, config, delta_flag="is_new")
-    )
-
-    # ---- 4. delta scoring -----------------------------------------------------
-    # restrict the feature side to records that can appear in a delta pair
-    ids_a_rel = keys_a.select(F.lower(F.hex("record_id")).alias("record_id")).distinct()
-    feats_rel = old_feats.join(ids_a_rel, "record_id", "semi").unionByName(feats_b)
-    scores = timed("pair_scores", scoring.score_pairs(pairs, feats_rel, config))
-
-    # ---- 5. partial connected components --------------------------------------
-    edges_delta = clustering.accepted_edges(scores, config)  # binary ids
-    ep = (
-        edges_delta.select(F.lower(F.hex("id_a")).alias("record_id"))
-        .unionByName(edges_delta.select(F.lower(F.hex("id_b")).alias("record_id")))
-        .distinct()
-    )
-    if config.collapse_exact_dups:
+        reps = fresh.filter(F.col("record_id") == F.col("rep_id")).drop("rep_id")
         old_membership = catalog.read_table(spark, "exact_groups")
         rep_assign = old_clusters.join(
             old_membership.filter(F.col("record_id") == F.col("rep_id")).select("record_id"),
             "record_id",
             "semi",
         )
-    else:
-        rep_assign = old_clusters
-    aff_cl = rep_assign.join(ep, "record_id", "semi").select("cluster_id").distinct()
-    aff_members = rep_assign.join(aff_cl, "cluster_id", "semi")
-    # membership re-enters as star edges (root -> member): the transitive
-    # closure of the old accepted edges, already one hop from converged
-    star = aff_members.filter(F.col("record_id") != F.col("cluster_id")).select(
-        F.unhex("cluster_id").alias("id_a"), F.unhex("record_id").alias("id_b")
-    )
-    cc_records = aff_members.select("record_id").unionByName(feats_b.select("record_id"))
-    part = clustering.connected_components(
-        star.unionByName(edges_delta.select("id_a", "id_b")),
-        cc_records,
-        config,
-        id_codec="binary",
-        assume_unique_records=True,
-    )
-    untouched = rep_assign.join(aff_cl, "cluster_id", "anti").select(
-        "record_id", "cluster_id", "n_iter"
-    )
-    rep_clusters = untouched.unionByName(part)
 
-    if config.collapse_exact_dups:
-        full_membership = old_membership.unionByName(membership_new)
-        final = full_membership.join(
-            rep_clusters.withColumnRenamed("record_id", "rep_id"), "rep_id"
-        ).select("record_id", "cluster_id", "n_iter")
-        # label invariant: cluster_id == the cluster's GLOBAL min record id
-        # (run_pipeline guarantees it; chained increments and the planted-
-        # truth gate rely on it). Every CC participant is already labeled
-        # min-first; the only records that bypass CC are the ADOPTED sha
-        # duplicates, so only they can undercut a label. One O(|B|) agg +
-        # a tiny broadcast-able relabel join — never an O(|A∪B|) relabel.
-        adopted_assign = adopted.join(
-            rep_clusters.withColumnRenamed("record_id", "rep_id"), "rep_id"
-        ).select("record_id", "cluster_id")
-        relabel = (
-            adopted_assign.groupBy("cluster_id")
-            .agg(F.min("record_id").alias("new_label"))
-            .filter(F.col("new_label") < F.col("cluster_id"))
-        )
-        final = (
-            final.join(relabel, "cluster_id", "left")
-            .withColumn("cluster_id", F.coalesce("new_label", "cluster_id"))
-            .select("record_id", "cluster_id", "n_iter")
-        )
-    else:
-        final = rep_clusters
-    final = timed("clusters", final)
+        def finish(rep_clusters: DataFrame) -> DataFrame:
+            final = _expand_members(old_membership.unionByName(membership_new), rep_clusters)
+            # label invariant: cluster_id == the cluster's GLOBAL min record
+            # id (run_pipeline guarantees it; chained increments and the
+            # planted-truth gate rely on it). Every CC participant is
+            # already labeled min-first; the only records that bypass CC
+            # are the ADOPTED sha duplicates, so only they can undercut a
+            # label. One O(|B|) agg + a tiny broadcast-able relabel join —
+            # never an O(|A∪B|) relabel.
+            relabel = (
+                _expand_members(adopted, rep_clusters)
+                .groupBy("cluster_id")
+                .agg(F.min("record_id").alias("new_label"))
+                .filter(F.col("new_label") < F.col("cluster_id"))
+            )
+            return (
+                final.join(relabel, "cluster_id", "left")
+                .withColumn("cluster_id", F.coalesce("new_label", "cluster_id"))
+                .select("record_id", "cluster_id", "n_iter")
+            )
+
+    # ---- 2-5. the shared chain over the delta -------------------------------
+    feats_b, scores, final = resolve(
+        reps, config, stage, finish, prior=Prior(old_feats, rep_assign)
+    )
 
     # ---- 6. durable state update ----------------------------------------------
     # ORDER MATTERS twice over. Read-consistency: `final` and `scores`
     # lineages scan the CURRENT features/exact_groups/clusters tables
-    # lazily; both are checkpointed + counted above (timed), and clusters
+    # lazily; both are checkpointed + counted above (stage), and clusters
     # is staged-then-swapped, so every read of the old state completes
     # before any table changes underneath. Crash-consistency (ADVICE r5
     # high): the FIRST durable action marks the clusters manifest
@@ -377,20 +286,12 @@ def incremental_update(
     catalog.write_table(feats_b, "features", mode="append", partition_by=part_by)
     if membership_new is not None:
         catalog.write_table(membership_new, "exact_groups", mode="append")
-    for stage in ("blocking_keys", "candidate_pairs", "pair_scores"):
-        _invalidate_stage(catalog, spark, stage)
+    for stage_name in ("blocking_keys", "candidate_pairs", "pair_scores"):
+        _invalidate_stage(catalog, spark, stage_name)
     upstream = None
-    for stage in _STATE_CHAIN if config.collapse_exact_dups else _STATE_CHAIN[1:]:
-        m = {
-            "stage": stage,
-            "config_hash": cfg_hash,
-            "format_version": STAGE_FORMAT_VERSION,
-            "upstream_digest": manifest_digest(upstream),
-            "run_nonce": uuid.uuid4().hex,
-            "mode": "incremental",
-        }
-        catalog.write_manifest(stage, m)
-        upstream = m
+    for stage_name in _STATE_CHAIN if config.collapse_exact_dups else _STATE_CHAIN[1:]:
+        upstream = _manifest(stage_name, cfg_hash, upstream, mode="incremental")
+        catalog.write_manifest(stage_name, upstream)
 
     result_clusters = catalog.read_table(spark, "clusters")
     # delta frames are localCheckpoint snapshots, not persist()-cached —

@@ -1,5 +1,7 @@
-"""End-to-end 3-stage ER pipeline with stage checkpointing, resume,
-per-partition lineage and a durable metrics table.
+"""End-to-end ER pipeline: the exact-duplicate collapse, then the
+:func:`resolve` chain (features, blocking keys, candidate pairs, pair
+scores, clusters) that ``incremental_update`` also runs, with stage
+checkpointing, resume, per-partition lineage and a durable metrics table.
 
 Replaces the reference's hand-wired queue pipeline
 (`/root/reference/qurator/sbb_ned/models/ned_lookup.py:159-173` — 7
@@ -17,9 +19,10 @@ import os
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
+from functools import partial
 from hashlib import sha256
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -45,20 +48,6 @@ STAGES = (
 #      would double-hex its ids and silently singleton-ize every cluster
 #      (ADVICE r4 #2)
 STAGE_FORMAT_VERSION = 2
-
-
-def _with_ids(files: DataFrame) -> DataFrame:
-    """Ensure the per-row invariant columns exist (input_hint: record_id
-    derived from (repo,path,commit), sha256 of content) — cheap JVM-side
-    hashes, no feature extraction."""
-    df = files
-    if "record_id" not in df.columns:
-        df = df.withColumn(
-            "record_id", F.sha2(F.concat_ws("\x1f", "repo", "path", "commit"), 256)
-        )
-    if "sha256" not in df.columns:
-        df = df.withColumn("sha256", F.sha2(F.col("content"), 256))
-    return df
 
 
 @dataclass
@@ -108,6 +97,47 @@ def _valid_manifest(
     return m
 
 
+def _manifest(stage: str, cfg_hash: str, upstream: dict | None, **extra) -> dict:
+    """A stage manifest chained to ``upstream``'s digest. The fresh nonce
+    per write makes any stage rebuilt this run (its inputs may have
+    drifted) invalidate every downstream manifest chained to the old
+    build."""
+    return {
+        "stage": stage,
+        "config_hash": cfg_hash,
+        "format_version": STAGE_FORMAT_VERSION,
+        "upstream_digest": manifest_digest(upstream),
+        "run_nonce": uuid.uuid4().hex,
+        **extra,
+    }
+
+
+def _duplicate_id(files: DataFrame):
+    """One record_id that occurs more than once in ``files`` (a Row with
+    its ``count``), or None. A bare-id aggregation: only the 32-byte ids
+    are shuffled, never content."""
+    dup = files.groupBy("record_id").count().filter(F.col("count") > 1).limit(1).collect()
+    return dup[0] if dup else None
+
+
+def _expand_members(membership: DataFrame, rep_clusters: DataFrame) -> DataFrame:
+    """Give each (record_id, rep_id) member its representative's cluster.
+    Labels are unchanged: a cluster's min record id is itself a
+    representative, so cluster_id == planted entity_id still."""
+    return membership.join(
+        rep_clusters.withColumnRenamed("record_id", "rep_id"), "rep_id"
+    ).select("record_id", "cluster_id", "n_iter")
+
+
+def _endpoint_ids(pairs: DataFrame) -> DataFrame:
+    """Distinct hex record_ids at either end of binary (id_a, id_b) pairs."""
+    return (
+        pairs.select(F.lower(F.hex("id_a")).alias("record_id"))
+        .unionByName(pairs.select(F.lower(F.hex("id_b")).alias("record_id")))
+        .distinct()
+    )
+
+
 def _partition_lineage(df: DataFrame, stage: str) -> DataFrame:
     """Per-partition row counts — the durable analog of the reference's
     tqdm progress counters (`ground_truth/clef_hipe_2022.py:355-368`)."""
@@ -120,6 +150,142 @@ def _partition_lineage(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
+@dataclass
+class Prior:
+    """The resolved state an increment attaches to: the old corpus's
+    stored features and its representatives' clusters
+    (record_id, cluster_id, n_iter)."""
+
+    features: DataFrame
+    clusters: DataFrame
+
+
+def resolve(
+    reps: DataFrame,
+    config: PipelineConfig,
+    stage,
+    finish=None,
+    prior: Prior | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The ER stage chain, shared by :func:`run_pipeline` and
+    :func:`~sbb_ned_spark.plans.incremental.incremental_update`:
+    features -> blocking keys -> candidate pairs -> pair scores ->
+    clusters over the representative files ``reps``. Returns
+    (features, scores, clusters).
+
+    ``stage(name, build, partition_by=())`` is the caller's snapshot
+    policy. It returns the named stage's frame and calls ``build()`` only
+    when it must compute it, so a resumed stage runs no layer (CC runs
+    jobs when called, which is why it lives inside the clusters build).
+    ``build`` returns the frame, except for blocking_keys, whose build
+    returns the (cold, hot) split. ``finish(rep_clusters)``, if given,
+    turns the representatives' clusters into the output rows.
+
+    With a ``prior`` the chain is the delta plan: old-old pairs are
+    dropped, and only the old clusters an accepted delta edge touches are
+    re-solved. Layers are called through their module attributes
+    (``blocking.candidate_pairs``), where perfbench's tracer wraps them.
+    """
+
+    def build_features():
+        df = blocking.record_features(reps, config)
+        if config.features_partition_buckets:
+            # low-cardinality repo hash bucket: partition pruning stays
+            # useful at 10^12 files without a per-repo partition blowup
+            df = df.withColumn(
+                "repo_bucket",
+                F.pmod(F.xxhash64("repo"), F.lit(config.features_partition_buckets)),
+            )
+        return df
+
+    part = ("repo_bucket",) if config.features_partition_buckets else ()
+    feats = stage("features", build_features, partition_by=part)
+
+    def build_keys():
+        keys = blocking.blocking_keys(feats, config)
+        if prior is not None:
+            # the old posting is re-derived from the features table (the
+            # stored cold posting dropped old singleton keys, exactly the
+            # keys a new record can pair on), restricted by a semi-join to
+            # keys the new records hold. For those keys the union's
+            # frequency is complete; any other key can only pair old with
+            # old, which the state already holds.
+            keys = keys.withColumn("is_new", F.lit(True))
+            keys = (
+                blocking.blocking_keys(prior.features, config)
+                .join(keys.select("key").distinct(), "key", "semi")
+                .withColumn("is_new", F.lit(False))
+                .unionByName(keys)
+            )
+        return blocking.split_hot_keys(keys, config)
+
+    cold = stage("blocking_keys", build_keys)
+    flag = None if prior is None else "is_new"
+    pairs = stage(
+        "candidate_pairs", lambda: blocking.candidate_pairs(cold, config, delta_flag=flag)
+    )
+
+    def build_scores():
+        side = feats
+        if prior is not None:
+            old = prior.features.join(_endpoint_ids(pairs), "record_id", "semi")
+            side = old.unionByName(feats)
+        return scoring.score_pairs(pairs, side, config)
+
+    scores = stage("pair_scores", build_scores)
+
+    def build_clusters():
+        # pair ids arrive as 32-byte binary; CC keeps them binary and hexes
+        # back at the output boundary
+        edges = clustering.accepted_edges(scores, config)
+        records = feats
+        if prior is not None:
+            # a touched cluster's membership re-enters as star edges
+            # (root -> member): the transitive closure of the old accepted
+            # edges, already one hop from converged
+            touched = (
+                prior.clusters.join(_endpoint_ids(edges), "record_id", "semi")
+                .select("cluster_id")
+                .distinct()
+            )
+            members = prior.clusters.join(touched, "cluster_id", "semi")
+            star = members.filter(F.col("record_id") != F.col("cluster_id")).select(
+                F.unhex("cluster_id").alias("id_a"), F.unhex("record_id").alias("id_b")
+            )
+            edges = star.unionByName(edges)
+            records = members.select("record_id").unionByName(feats.select("record_id"))
+        # assume_unique_records skips a whole-table distinct. It is safe on
+        # the collapse path, where the stage-0 window fails loudly on a
+        # repeated record_id, and on a delta, whose ids incremental_update
+        # checks; a full run with the collapse off keeps CC's distinct.
+        rep_clusters = clustering.connected_components(
+            edges,
+            records,
+            config,
+            id_codec="binary",
+            assume_unique_records=prior is not None or config.collapse_exact_dups,
+        )
+        if prior is not None:
+            untouched = prior.clusters.join(touched, "cluster_id", "anti")
+            rep_clusters = untouched.select(
+                "record_id", "cluster_id", "n_iter"
+            ).unionByName(rep_clusters)
+        return finish(rep_clusters) if finish else rep_clusters
+
+    return feats, scores, stage("clusters", build_clusters)
+
+
+# Stages whose cache several concurrent jobs read: count them even in light
+# mode (round 6, measured via event log). The scoring query reads features
+# through three exchange subtrees (pairs chain, fa side, fb side) and the
+# candidate self-join reads blocking_keys on both sides; AQE runs such
+# subtrees as concurrent jobs, and on a lazily persisted cache each races
+# to compute the whole lineage itself ("Block rdd_N already exists"),
+# repeating the Arrow-UDF feature stage 2-3x. One count() fills the cache
+# once.
+_COUNTED = ("features", "blocking_keys")
+
+
 def run_pipeline(
     files: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
@@ -127,13 +293,12 @@ def run_pipeline(
     collect_lineage: bool = False,
     light: bool = False,
 ) -> PipelineResult:
-    """``light=True`` skips the per-stage count() barriers (rows_out=None)
-    for SINGLE-consumer stages: those persist lazily and materialize on
-    first downstream use — the benchmark mode. Multi-consumer stages
-    (features, blocking_keys) keep an eager count() even in light mode:
-    their cache is read by several independent exchange subtrees that AQE
-    runs as concurrent jobs, and a lazy cache makes each job recompute
-    the full lineage (see the eager_cache notes below). Durable
+    """Stage 0 (exact-duplicate collapse), then the :func:`resolve` chain.
+
+    ``light=True`` skips the per-stage count() barriers (rows_out=None)
+    of single-consumer stages: those persist lazily and materialize on
+    first downstream use — the benchmark mode. features and
+    blocking_keys are always counted (see ``_COUNTED``). Durable
     checkpoints imply the counts anyway (the parquet write is a full
     pass).
 
@@ -151,77 +316,58 @@ def run_pipeline(
     lineage_frames: list[DataFrame] = []
     persisted: list[DataFrame] = []
     upstream: dict | None = None  # manifest of the previous stage
+    n_files: int | None = None  # feature rows, the rows_in of later stages
 
-    def finish_stage(stage: str, df: DataFrame, partition_by: tuple = ()) -> DataFrame:
-        nonlocal upstream
-        manifest = {
-            "stage": stage,
-            "config_hash": cfg_hash,
-            "format_version": STAGE_FORMAT_VERSION,
-            "upstream_digest": manifest_digest(upstream),
-            # fresh nonce per RECOMPUTE: any stage rebuilt this run (its
-            # inputs may have drifted) conservatively invalidates every
-            # downstream manifest chained to the old build
-            "run_nonce": uuid.uuid4().hex,
-        }
+    def stage(name: str, build, partition_by: tuple = ()) -> DataFrame:
+        nonlocal upstream, n_files
+        if resume and (m := _valid_manifest(catalog, name, cfg_hash, upstream)):
+            upstream = m
+            df = catalog.read_table(spark, name)
+            if name == "features":
+                n_files = df.count()
+            return df
+        t0 = time.monotonic()
+        df, hot = build(), None
+        if isinstance(df, tuple):
+            df, hot = df
+        hot_n = None if light or hot is None else hot.count()
+        manifest = _manifest(name, cfg_hash, upstream)
         if catalog is None:
             # no durable checkpoint requested: cache so the stage-boundary
             # count() and downstream stages don't recompute the UDF lineage
             df = df.persist()
             persisted.append(df)
         else:
-            catalog.write_table(df, stage, partition_by=partition_by)
-            catalog.write_manifest(stage, manifest)
-            df = catalog.read_table(spark, stage)
+            catalog.write_table(df, name, partition_by=partition_by)
+            catalog.write_manifest(name, manifest)
+            df = catalog.read_table(spark, name)
         upstream = manifest
+        n = df.count() if not light or root or name in _COUNTED else None
+        row = {
+            "stage": name,
+            "rows_in": n_files,
+            "rows_out": n,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+        }
+        if hot is not None:
+            row["hot_keys_dropped"] = hot_n
+        metrics.append(row)
+        if name == "features":
+            n_files = n
+        if collect_lineage:
+            lineage_frames.append(_partition_lineage(df, name))
         return df
 
-    def timed(
-        stage: str,
-        fn,
-        rows_in: int | None = None,
-        partition_by: tuple = (),
-        eager_cache: bool = False,
-    ):
-        t0 = time.monotonic()
-        df = finish_stage(stage, fn(), partition_by)
-        n = None
-        if not light or root or eager_cache:
-            n = df.count()
-        metrics.append(
-            {
-                "stage": stage,
-                "rows_in": rows_in,
-                "rows_out": n,
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-            }
-        )
-        if collect_lineage:
-            lineage_frames.append(_partition_lineage(df, stage))
-        return df, n
-
-    def resumable(stage: str) -> dict | None:
-        return _valid_manifest(catalog, stage, cfg_hash, upstream) if resume else None
-
+    files = blocking.with_ids(files)
     if config.validate_unique_ids:
-        # Opt-in COMPLETE duplicate-record_id check (see config.py): one
-        # bare-id aggregation pass (32-byte ids only — content is never
-        # shuffled here) that also catches a record_id duplicated with
-        # different content, which the free stage-0 window below cannot
-        # see. Eager by design: fail before any stage computes.
-        dup = (
-            _with_ids(files)
-            .select("record_id")
-            .groupBy("record_id")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
+        # Opt-in COMPLETE duplicate-record_id check (see config.py): it
+        # also catches a record_id duplicated with different content,
+        # which the free stage-0 window below cannot see. Eager by design:
+        # fail before any stage computes.
+        if dup := _duplicate_id(files):
             raise ValueError(
                 "run_pipeline(validate_unique_ids=True): duplicate record_id "
-                f"in input: {dup[0]['record_id']} (x{dup[0]['count']})"
+                f"in input: {dup['record_id']} (x{dup['count']})"
             )
 
     # ---- Stage 0: exact-duplicate collapse -----------------------------------
@@ -230,7 +376,7 @@ def run_pipeline(
     # BEFORE feature extraction; the clusters stage expands members back.
     # This shrinks every downstream stage and removes the giant exact-dup
     # blocks from the pair join entirely.
-    membership: DataFrame | None = None
+    finish = None
     if config.collapse_exact_dups:
         from pyspark.sql.window import Window
 
@@ -250,8 +396,7 @@ def run_pipeline(
         # in different sha groups and needs config.validate_unique_ids
         # (the full bare-id check above) to be caught.
         tagged = (
-            _with_ids(files)
-            .withColumn(
+            files.withColumn(
                 "rep_id", F.min("record_id").over(Window.partitionBy("sha256"))
             )
             .withColumn(
@@ -274,112 +419,11 @@ def run_pipeline(
             )
             .drop("_n_dup")
         )
-        if (m := resumable("exact_groups")) is not None:
-            membership = catalog.read_table(spark, "exact_groups")
-            upstream = m
-        else:
-            membership, _ = timed(
-                "exact_groups", lambda: tagged.select("record_id", "rep_id")
-            )
+        membership = stage("exact_groups", lambda: tagged.select("record_id", "rep_id"))
         files = tagged.filter(F.col("record_id") == F.col("rep_id")).drop("rep_id")
+        finish = partial(_expand_members, membership)
 
-    # ---- Stage 1a: features ------------------------------------------------
-    if (m := resumable("features")) is not None:
-        feats = catalog.read_table(spark, "features")
-        n_files = feats.count()
-        upstream = m
-    else:
-        part = ("repo_bucket",) if config.features_partition_buckets else ()
-        def build_features():
-            df = blocking.record_features(files, config)
-            if config.features_partition_buckets:
-                # low-cardinality repo hash bucket: partition pruning stays
-                # useful at 10^12 files without a per-repo partition blowup
-                df = df.withColumn(
-                    "repo_bucket",
-                    F.pmod(F.xxhash64("repo"), F.lit(config.features_partition_buckets)),
-                )
-            return df
-        # eager_cache even in light mode (round 6, measured via event log):
-        # the scoring query consumes `feats` through THREE independent
-        # exchange subtrees (pairs chain, fa side, fb side), and AQE
-        # materializes independent subtrees as CONCURRENT jobs — with a
-        # lazily-persisted cache each job races to compute the full Arrow-
-        # UDF feature lineage itself ("Block rdd_N already exists" in the
-        # bench stderr), duplicating the pipeline's most expensive per-row
-        # stage 2-3x. One count() barrier populates the cache once; every
-        # subtree then reads stored blocks.
-        feats, n_files = timed(
-            "features", build_features, partition_by=part, eager_cache=True
-        )
-
-    # ---- Stage 1b: blocking keys (with hot-key cutoff) ----------------------
-    if (m := resumable("blocking_keys")) is not None:
-        cold = catalog.read_table(spark, "blocking_keys")
-        upstream = m
-    else:
-        keys = blocking.blocking_keys(feats, config)
-        cold_raw, hot = blocking.split_hot_keys(keys, config)
-        hot_n = None if light else hot.count()
-        # eager_cache: the candidate self-join reads `cold` on BOTH sides —
-        # same concurrent-materialization race as `feats` above
-        cold, _ = timed(
-            "blocking_keys", lambda: cold_raw, rows_in=n_files, eager_cache=True
-        )
-        metrics[-1]["hot_keys_dropped"] = hot_n
-
-    # ---- Stage 1c: candidate pairs -------------------------------------------
-    if (m := resumable("candidate_pairs")) is not None:
-        pairs = catalog.read_table(spark, "candidate_pairs")
-        upstream = m
-    else:
-        pairs, _ = timed(
-            "candidate_pairs", lambda: blocking.candidate_pairs(cold, config), rows_in=n_files
-        )
-
-    # ---- Stage 2: pairwise scoring -------------------------------------------
-    if (m := resumable("pair_scores")) is not None:
-        scores = catalog.read_table(spark, "pair_scores")
-        upstream = m
-    else:
-        scores, _ = timed(
-            "pair_scores",
-            lambda: scoring.score_pairs(pairs, feats, config),
-            rows_in=n_files,
-        )
-
-    # ---- Stage 3: decision + connected components -----------------------------
-    if (m := resumable("clusters")) is not None:
-        clusters = catalog.read_table(spark, "clusters")
-        upstream = m
-    else:
-        def build_clusters():
-            edges = clustering.accepted_edges(scores, config)
-            # pair ids arrive as 32-byte binary (blocking/scoring run on
-            # unhexed sha256 ids end-to-end); CC keeps them binary and
-            # hexes back at the output boundary
-            # assume_unique_records skips a whole-table distinct. It is
-            # safe only on the collapse path, where the stage-0 duplicate
-            # guard above fails loudly on repeated record_ids; with the
-            # collapse off (diagnostic mode) nothing upstream checks, so
-            # CC keeps its own distinct there.
-            rep_clusters = clustering.connected_components(
-                edges,
-                feats,
-                config,
-                id_codec="binary",
-                assume_unique_records=config.collapse_exact_dups,
-            )
-            if membership is None:
-                return rep_clusters
-            # expand exact-dup members to their representative's cluster;
-            # labels are unchanged (a cluster's min record id is itself a
-            # representative, so cluster_id == planted entity_id still)
-            return membership.join(
-                rep_clusters.withColumnRenamed("record_id", "rep_id"), "rep_id"
-            ).select("record_id", "cluster_id", "n_iter")
-
-        clusters, _ = timed("clusters", build_clusters, rows_in=n_files)
+    _, scores, clusters = resolve(files, config, stage, finish)
 
     if root:
         with open(os.path.join(root, "metrics.json"), "w") as f:

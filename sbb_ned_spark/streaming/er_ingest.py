@@ -16,7 +16,7 @@ micro-batch resolved into the checkpointed pipeline state via
   between the sink call and the offset commit): records whose
   ``record_id`` already exists in the state are dropped up front, so a
   fully-replayed batch is a no-op. ``record_id`` is the deterministic
-  identity hash sha256(repo, path, commit) (`plans/pipeline.py:50-58`),
+  identity hash sha256(repo, path, commit) (``blocking.with_ids``),
   so this is an exactly-once-per-record contract; a genuinely updated
   file arrives under a NEW commit — a new identity — and is resolved as
   a new record (the state is append-only by identity, the same contract
@@ -42,11 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
+from sbb_ned_spark.operators.blocking import with_ids
 from sbb_ned_spark.plans import incremental as I
 from sbb_ned_spark.plans import pipeline as P
-from sbb_ned_spark.plans.pipeline import _with_ids
 from sbb_ned_spark.sources.catalog import get_catalog
-from sbb_ned_spark.streaming.events import FILES_DDL
+
+FILES_DDL = "repo string, path string, commit string, lang string, content string"
 
 
 def ingest_batch(batch_df: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -> dict:
@@ -95,7 +96,7 @@ def ingest_batch(batch_df: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -
     # fails loudly on a broken/mismatched chain — never bootstrap-overwrite
     I._validate_state(catalog, config)
 
-    batch = _with_ids(batch_df)
+    batch = with_ids(batch_df)
     seen = catalog.read_table(spark, "clusters").select("record_id")
     fresh = batch.join(seen, "record_id", "anti")
     if fresh.limit(1).isEmpty():

@@ -1,4 +1,4 @@
-"""Similarity-search, text-analysis, multimodal and streaming tests."""
+"""Similarity-search, text-analysis and multimodal tests."""
 
 from __future__ import annotations
 
@@ -167,45 +167,6 @@ def test_multimodal_real_decode_for_png_and_wav():
                           + (64).to_bytes(4, "big") + (48).to_bytes(4, "big"),
                           "image") == (64, 48, None)
     assert mm.decode_blob(b"bytes", "video") == (None, None, None)
-
-
-def test_streaming_windowed_counts(spark, tmp_path):
-    from sbb_ned_spark.streaming import events as sev
-
-    src = str(tmp_path / "in")
-    spark.read.parquet(f"{SF}/events.parquet").write.parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    )
-    agg = sev.windowed_event_counts(stream)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    sev.run_available_now(agg, out, ckpt, mode="append")
-    got = spark.read.parquet(out)
-    batch = sev.windowed_event_counts(spark.read.parquet(src))
-    # append mode only emits windows the watermark has closed; every
-    # emitted row must match the batch computation exactly
-    j = got.join(
-        batch.withColumnRenamed("n", "n_b").withColumnRenamed("sum_value", "s_b"),
-        ["window_start", "window_end", "event_type"],
-        "left",
-    )
-    assert j.filter(F.col("n") != F.col("n_b")).count() == 0
-
-
-def test_streaming_incremental_ingest(spark, tmp_path):
-    from sbb_ned_spark import fixtures
-    from sbb_ned_spark.streaming import events as sev
-
-    pdf, _ = fixtures.generate_files_pdf("tiny")
-    src = str(tmp_path / "landing")
-    spark.createDataFrame(pdf.head(40)).write.parquet(src)
-    feats = sev.incremental_ingest(spark, src)
-    out = str(tmp_path / "feat_out")
-    sev.run_available_now(feats, out, str(tmp_path / "feat_ckpt"))
-    got = spark.read.parquet(out)
-    assert got.count() == 40
-    assert "sha256" in got.columns and "mh_content" in got.columns
 
 
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
