@@ -196,16 +196,68 @@ def split_hot_keys(
     return cold, hot
 
 
+def posting_pairs(
+    left: DataFrame,
+    on,
+    right: DataFrame | None = None,
+    a="id_a",
+    b="id_b",
+    where=None,
+    combine=False,
+) -> DataFrame:
+    """(``a``, ``b``, n_shared_keys) for ids posted under a shared key
+    ``on``: ``left`` posts ``a``, ``right`` posts ``b`` (``None``: ``left``
+    with ``a`` renamed to ``b``). ``where`` filters the joined rows before
+    any exchange (default ``a < b``: each unordered pair once). The one
+    candidate join of ER blocking, the dedup families and the ANN paths.
+
+    A pair arrives as one joined row per shared key; ``combine`` picks how
+    those rows meet. Each caller's choice was timed against the old plan
+    (SCALE.md "Stage 1c"):
+
+    - ``False``: the raw rows take ONE exchange on ``a`` alone. Hash
+      partitioning on a subset of the grouping keys satisfies the
+      groupBy(a, b) clustering AND a following window on ``a``
+      (candidate_pairs' rank_a, VERDICT r4 ask #4). ER keys, shingles,
+      fingerprints and MinHash bands use it: most of their pairs share a
+      key or two, so a map-side count merges little. Every row of one
+      ``a`` lands in one task; that skew is bounded only where the caller
+      caps key frequency (ER: ~66 keys/record x max_key_frequency).
+    - ``True``: Spark's map-side partial count, then an exchange on
+      (a, b), so the per-pair work after it spreads over pairs, not over
+      ``a``. The hyperplane-LSH and IVF paths and SimHash use it.
+    """
+    right = left.withColumnRenamed(a, b) if right is None else right
+    joined = left.join(right, on).filter(F.col(a) < F.col(b) if where is None else where)
+    if not combine:
+        joined = joined.repartition(a)
+    return joined.groupBy(a, b).agg(F.count("*").alias("n_shared_keys"))
+
+
+def join_sides(pairs, side, id_col="id", a="id_a", b="id_b", right=None) -> DataFrame:
+    """``pairs`` with both endpoints' payloads: every ``side`` column but
+    ``id_col`` joins back as ``{c}_a`` on ``a`` and ``{c}_b`` on ``b``
+    (``right``, when given, supplies the ``b`` payload)."""
+
+    def suffixed(df: DataFrame, key: str, sfx: str) -> DataFrame:
+        cols = [F.col(c).alias(c + sfx) for c in df.columns if c != id_col]
+        return df.select(F.col(id_col).alias(key), *cols)
+
+    other = side if right is None else right
+    return pairs.join(suffixed(side, a, "_a"), a).join(suffixed(other, b, "_b"), b)
+
+
 def candidate_pairs(
     posting: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
     delta_flag: str | None = None,
 ) -> DataFrame:
-    """Self equi-join of the cold posting table on ``key`` with a strict
-    ``id_a < id_b`` order (J6 pattern, `data_processor.py:191-196`),
-    deduped across keys with per-pair shared-key count, and capped per
-    record at ``max_candidates_per_record`` (reference `max_candidates`=25,
-    `index.py:209-211`) via a window top-k (W4).
+    """:func:`posting_pairs` self-join of the cold posting table on ``key``
+    (``id_a < id_b``, J6 pattern, `data_processor.py:191-196`) with the
+    per-pair shared-key count, capped per record at
+    ``max_candidates_per_record`` (reference `max_candidates`=25,
+    `index.py:209-211`) via window top-k (W4): agg + sort + rank_a share
+    the one id_a exchange, then one id_b exchange serves rank_b.
 
     ``delta_flag``: name of a boolean posting column marking NEW records
     (the batch-incremental path, plans/incremental.py). Pairs between two
@@ -227,28 +279,12 @@ def candidate_pairs(
     """
     fa = [F.col(delta_flag).alias("new_a")] if delta_flag else []
     fb = [F.col(delta_flag).alias("new_b")] if delta_flag else []
-    left = posting.select(F.col("key"), F.col("record_id").alias("id_a"), *fa)
-    right = posting.select(F.col("key"), F.col("record_id").alias("id_b"), *fb)
-    # ONE pair-stream exchange on id_a serves BOTH the dedup aggregate and
-    # the rank_a window (round-4's 2.2x/4 stage, VERDICT r4 ask #4): hash-
-    # partitioning on id_a alone satisfies the groupBy(id_a, id_b)
-    # clustering requirement (a subset of the grouping keys) AND the
-    # rank_a window's partitioning, so the plan is
-    #   join-exchange -> exchange(id_a) -> agg + sort + rank_a (one stage)
-    #   -> exchange(id_b) -> rank_b
-    # instead of four wide passes. Map-side combine on the dropped
-    # (id_a,id_b) exchange was near-worthless anyway: a pair's duplicate
-    # rows live in DIFFERENT join partitions (one per shared key), so
-    # partial aggregation merged almost nothing. Skew on id_a is bounded
-    # by construction: <= ~66 keys/record x max_key_frequency rows.
-    joined = left.join(right, "key").filter(F.col("id_a") < F.col("id_b"))
+    left = posting.select("key", F.col("record_id").alias("id_a"), *fa)
+    right = posting.select("key", F.col("record_id").alias("id_b"), *fb)
+    where = F.col("id_a") < F.col("id_b")
     if delta_flag:
-        joined = joined.filter(F.col("new_a") | F.col("new_b")).drop("new_a", "new_b")
-    pairs = (
-        joined.repartition("id_a")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared_keys"))
-    )
+        where &= F.col("new_a") | F.col("new_b")
+    pairs = posting_pairs(left, "key", right, where=where)
     # evidence floor: true near-dups share many band keys (j^rows_per_band
     # per band over many bands); singleton collisions are noise. This is
     # the blocking-precision knob that bounds Stage-2 cost at scale.

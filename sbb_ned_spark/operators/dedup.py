@@ -1,23 +1,22 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, all set-oriented DataFrame plans (the LSH/banding pieces
-reuse the Stage-1 machinery; exact verification is native
-array_intersect/array_union — JVM-side, no Python):
+Five families, all set-oriented DataFrame plans with exact verification
+in native JVM expressions (no Python):
 
 - exact         : hash-groupBy on sha256(text)
-- ngram_jaccard : brute-force token-set Jaccard via posting-list self-join
-                  (explode -> join on token -> count intersections) — the
-                  exact oracle-checkable baseline
+- ngram_jaccard : brute-force shingle-set Jaccard — the exact
+                  oracle-checkable baseline
+- containment   : winnowed-fingerprint coverage of the smaller document
 - minhash_lsh   : MinHash band candidates -> exact Jaccard verification
 - simhash       : 64-bit SimHash, banded into 4x16-bit chunks -> verified
                   Hamming distance via native bit ops
-- embedding     : near-dup by cosine over an embedding column (see
-                  similarity_search for the top-k variant)
 
-Design note (100 TB): every family blocks first (hash key, LSH band, or
-simhash chunk) so the only cross-record join is an equi-join Catalyst can
-shuffle-partition; the brute-force path exists as the correctness oracle
-and carries a hot-token cutoff for skew, mirroring the reference's
+Every pair family posts ids under keys (shingle, fingerprint, band,
+chunk) and forms the pairs sharing a key with
+:func:`blocking.posting_pairs` — never the cross product. The verify
+joins its payload back with :func:`blocking.join_sides`, except SimHash,
+whose posted id carries its 8-byte signature. Brute-force paths carry
+a skew cutoff mirroring the reference's
 max_frequency rule (`/root/reference/qurator/sbb_ned/index.py:652-653`).
 """
 
@@ -31,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
+from sbb_ned_spark.operators.blocking import join_sides, posting_pairs
 
 
 def _token_array(text_col: str):
@@ -73,10 +73,10 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _posting_overlap(posting: DataFrame, key: str, max_key_freq: int | None) -> DataFrame:
-    """(id_a, id_b, n_shared, n_a, n_b) over an (id, ``key``) posting list:
-    ``n_shared`` = distinct keys the pair has in common (id_a < id_b),
-    ``n_a``/``n_b`` = each side's posting size. Only pairs sharing a key
-    are formed — one equi-join on the key, never the cross product.
+    """(id_a, id_b, n_shared_keys, n_a, n_b) over an (id, ``key``)
+    posting list: the :func:`~blocking.posting_pairs` count of distinct
+    keys the pair has in common (id_a < id_b), and each side's posting
+    size ``n``.
 
     ``max_key_freq`` drops keys posted by more than that many ids before
     the self-join (hot-key skew guard; sizes still count them, so the
@@ -97,17 +97,8 @@ def _posting_overlap(posting: DataFrame, key: str, max_key_freq: int | None) -> 
             .select(key)
         )
         posting = posting.join(F.broadcast(hot), key, "left_anti")
-    a = posting.select(F.col("id").alias("id_a"), key)
-    b = posting.select(F.col("id").alias("id_b"), key)
-    inter = (
-        a.join(b, key)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    return inter.join(
-        sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a"
-    ).join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
+    pairs = posting_pairs(posting.select(F.col("id").alias("id_a"), key), key)
+    return join_sides(pairs, sizes)
 
 
 def ngram_jaccard_pairs(
@@ -128,7 +119,8 @@ def ngram_jaccard_pairs(
     out = _posting_overlap(
         doc_shingles(df, id_col, text_col, k), "token", max_token_freq
     ).withColumn(
-        "jaccard", F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
+        "jaccard",
+        F.col("n_shared_keys") / (F.col("n_a") + F.col("n_b") - F.col("n_shared_keys")),
     )
     return out.filter(F.col("jaccard") >= tau).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
@@ -207,15 +199,11 @@ def containment_pairs(
     """
     out = _posting_overlap(
         winnow_fingerprints(df, id_col, text_col, k, w), "fp", max_fp_freq
-    ).withColumn("containment", F.col("n_shared") / F.least(F.col("n_a"), F.col("n_b")))
+    ).withColumn(
+        "containment", F.col("n_shared_keys") / F.least(F.col("n_a"), F.col("n_b"))
+    )
     return out.filter(F.col("containment") >= tau).select(
         "id_a", "id_b", F.round("containment", 6).alias("containment")
-    )
-
-
-def _with_token_set(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    return ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"), _shingle_array(text_col, k).alias("tok_set")
     )
 
 
@@ -271,19 +259,10 @@ def minhash_lsh_pairs(
         # concurrent subtree jobs, which race and duplicate the UDF pass
         .localCheckpoint(eager=True)
     )
-    keys = base.select("id", F.explode("band_keys").alias("key"))
-    cand = (
-        keys.alias("l")
-        .join(keys.alias("r"), "key")
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    sa = base.select(F.col("id").alias("id_a"), F.col("set_hashes").alias("set_a"))
-    sb = base.select(F.col("id").alias("id_b"), F.col("set_hashes").alias("set_b"))
+    keys = base.select(F.col("id").alias("id_a"), F.explode("band_keys").alias("key"))
+    cand = posting_pairs(keys, "key")
     verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        join_sides(cand, base.select("id", F.col("set_hashes").alias("set")))
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("set_a", "set_b"))
@@ -416,9 +395,11 @@ def simhash_pairs(
         )
         .localCheckpoint(eager=True)
     )
+    # the posted id is the (id, sig) struct, so the 8-byte sig rides
+    # through the pair exchange instead of a join-back per side (which
+    # re-shuffles the pair stream once sigs no longer broadcast)
     chunks = sigs.select(
-        "id",
-        "sig",
+        F.struct("id", "sig").alias("id_a"),
         F.explode(
             F.array(
                 *[
@@ -432,23 +413,11 @@ def simhash_pairs(
                 ]
             )
         ).alias("c"),
-    ).select("id", "sig", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    l = chunks.select(
-        F.col("chunk"), F.col("val"), F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
+    ).select("id_a", "c.chunk", "c.val")
+    pairs = posting_pairs(
+        chunks, ["chunk", "val"], where=F.col("id_a.id") < F.col("id_b.id"), combine=True
     )
-    r = chunks.select(
-        F.col("chunk"), F.col("val"), F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    cand = (
-        l.join(r, ["chunk", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    hamming = F.bit_count(F.col("id_a.sig").bitwiseXOR(F.col("id_b.sig")))
+    return pairs.select(
+        F.col("id_a.id").alias("id_a"), F.col("id_b.id").alias("id_b"), hamming.alias("hamming")
+    ).filter(F.col("hamming") <= max_hamming)

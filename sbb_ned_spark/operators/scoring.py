@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
 from sbb_ned_spark.functions import similarity as sim
+from sbb_ned_spark.operators.blocking import join_sides
 
 SCORE_SCHEMA = StructType(
     [
@@ -50,24 +51,6 @@ SCORE_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
-
-# columns shipped per pair side through the two scoring joins. sha256 /
-# norm_sha ride as 8-byte xxhash64 SIGS, not 64-char hex strings: the
-# kernel only ever tests EQUALITY, and a 64-bit sig collision (prob
-# ~2^-63 per pair) merely marks one unrelated pair exact — far below the
-# decision noise floor — while cutting ~224 bytes off every pair row of
-# the pipeline's dominant shuffle. `path` is pre-truncated to the Jaro-
-# Winkler kernel's own 64-byte cap (`similarity._JW_MAXL`), so scores
-# are byte-identical.
-_FEATURE_COLS = [
-    "token_set",
-    "skeleton_seq",
-    "trigram_vec",
-    "n_tokens",
-    "path",
-    "sha_sig",
-    "nsha_sig",
-]
 
 _TRIGRAM_DIM = 64
 
@@ -173,6 +156,14 @@ def _paired_features(pairs: DataFrame, features: DataFrame) -> DataFrame:
             F.col(col).isNull(), F.xxhash64(F.col("record_id"), F.lit(salt))
         ).otherwise(F.xxhash64(F.col(col)))
 
+    # columns shipped per pair side through the two scoring joins. sha256 /
+    # norm_sha ride as 8-byte xxhash64 SIGS, not 64-char hex strings: the
+    # kernel only ever tests EQUALITY, and a 64-bit sig collision (prob
+    # ~2^-63 per pair) merely marks one unrelated pair exact — far below the
+    # decision noise floor — while cutting ~224 bytes off every pair row of
+    # the pipeline's dominant shuffle. `path` is pre-truncated to the Jaro-
+    # Winkler kernel's own 64-byte cap (`similarity._JW_MAXL`), so scores
+    # are byte-identical.
     compact = features.select(
         F.unhex("record_id").alias("record_id"),
         "token_set",
@@ -183,15 +174,7 @@ def _paired_features(pairs: DataFrame, features: DataFrame) -> DataFrame:
         sig("sha256", 1).alias("sha_sig"),
         sig("norm_sha", 2).alias("nsha_sig"),
     )
-    fa = compact.select(
-        F.col("record_id").alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in _FEATURE_COLS],
-    )
-    fb = compact.select(
-        F.col("record_id").alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in _FEATURE_COLS],
-    )
-    return pairs.join(fa, "id_a").join(fb, "id_b")
+    return join_sides(pairs, compact, id_col="record_id")
 
 
 def score_pairs(

@@ -1,23 +1,23 @@
 """Similarity search over an embedding column (array<float>).
 
-- brute_force_topk : exact cosine top-k, fully native (zip_with +
-  aggregate for the dot product, window row_number for top-k). The
-  correctness baseline; O(|Q| x |V|) — fine when |Q| is small or either
-  side broadcasts.
+- brute_force_topk : exact cosine top-k over a broadcast cross join,
+  fully native (zip_with + aggregate for the dot product). The
+  correctness baseline; O(|Q| x |V|) — fine when |Q| is small.
 - lsh_topk         : random-hyperplane LSH buckets (one Arrow-batched
-  pandas UDF computes ALL tables' buckets in a single matmul)
-  -> posexplode -> (table, bucket) equi-join -> exact cosine re-rank.
-  The scale path: candidate generation is an equi-join instead of a
-  cross join — at 100 TB the cross join is impossible, the bucket join
-  shuffles on short keys.
-- ivf_topk          : IVF — spherical k-means coarse quantizer (tiny
+  pandas UDF computes ALL tables' buckets in a single matmul) joined on
+  (table, bucket) — at 100 TB the cross join is impossible, the bucket
+  join shuffles on short keys.
+- ivf_topk         : IVF — spherical k-means coarse quantizer (tiny
   driver-held codebook, distributed E-step / native M-step Lloyd
-  training) -> single-cell postings for vectors, n_probe cells per
-  query -> cell equi-join -> exact cosine re-rank. The second scale
-  path beside LSH; recall knob is n_probe/n_cells (exhaustive at
-  n_probe == n_cells).
-- embedding_near_dup_pairs : pairs with cosine >= tau via the same
-  bucket-then-verify shape (dedup by embedding).
+  training); vectors post one cell, queries their n_probe nearest.
+  Recall knob is n_probe/n_cells (exhaustive at n_probe == n_cells).
+- embedding_near_dup_pairs : pairs with cosine >= tau over the buckets.
+
+The candidate paths are Stage-1 blocking's pair shape:
+:func:`blocking.posting_pairs` (with the map-side combine: a pair repeats
+across many tables), :func:`blocking.join_sides` of each ``_side``
+(vector and norm), then the exact ``_cosine``; the top-k operators share
+one ``_top_k`` window.
 
 Parameters are DERIVED from the similarity target, not hard-coded: for
 hyperplane LSH the per-plane collision probability of a pair at angle
@@ -51,28 +51,46 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
+from sbb_ned_spark.operators.blocking import join_sides, posting_pairs
 
-def _norm_expr(c: str):
-    return F.sqrt(F.aggregate(F.col(c), F.lit(0.0), lambda acc, v: acc + v * v))
+
+def _side(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, n): the vector and its norm, computed once per side row."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias("id"),
+        v.alias("v"),
+        F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)).alias("n"),
+    )
 
 
-def _cosine_with_norms(a: str, b: str, na: str, nb: str):
-    """Cosine given per-SIDE precomputed norms (round-6, guide §1.2/§4.1):
-    higher-order aggregates are interpreted (CodegenFallback), and the
-    pair stream is O(|Q|x|V|) or O(candidates) while each side is only
-    O(rows) — computing the two norm aggregates once per side row instead
-    of once per pair removes 2/3 of the per-pair lambda work. Numerically
-    IDENTICAL to the old per-pair formulation (dot and both norm folds
-    inline): the same fold over the same doubles, just evaluated on the
-    side row before the join."""
+def _cosine():
+    """Rounded cosine of ``v_a``/``v_b`` over the per-SIDE norms
+    ``n_a``/``n_b`` (round-6, guide §1.2/§4.1): the higher-order folds
+    are interpreted (CodegenFallback), so ``_side`` computes each norm
+    once per side row, not per pair — 2/3 less per-pair lambda work,
+    numerically identical (the same fold over the same doubles)."""
     dot = F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
+        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    return F.when(
-        (F.col(na) > 0) & (F.col(nb) > 0), dot / (F.col(na) * F.col(nb))
-    ).otherwise(F.lit(0.0))
+    na, nb = F.col("n_a"), F.col("n_b")
+    return F.round(F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0)), 6)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` highest-cosine neighbors per query, ties broken on the
+    smaller neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def brute_force_topk(
@@ -84,26 +102,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query (excluding self), deterministic
     tie-break on neighbor id."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", _norm_expr("qv"))
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    ).withColumn("nn", _norm_expr("nv"))
+    q = _side(queries, id_col, vec_col).toDF("query_id", "v_a", "n_a")
+    v = _side(vectors, id_col, vec_col).toDF("neighbor_id", "v_b", "n_b")
     scored = (
         F.broadcast(q)
         .crossJoin(v)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(_cosine_with_norms("qv", "nv", "qn", "nn"), 6))
+        .withColumn("cosine", _cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_lsh_params(
@@ -164,8 +171,6 @@ def _with_table_buckets(
     pair dedup shuffle bare ids (a few bytes/row); vectors are joined
     back once per side only for the exact verify — at scale the pair
     stream dominates row count, so it must stay narrow."""
-    from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
-
     df = ensure_min_parallelism(df)
     udf = make_hyperplane_buckets_udf(dim, n_planes, n_tables, seed)
     return df.select(
@@ -198,12 +203,12 @@ def lsh_candidates(
     q = _with_table_buckets(
         queries, id_col, vec_col, dim, n_planes, n_tables, seed, "query_id"
     )
-    return (
-        q.join(v, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
+    pairs = posting_pairs(
+        q, ["table", "bucket"], v, a="query_id", b="neighbor_id",
+        where=F.col("query_id") != F.col("neighbor_id"),
+        combine=True,
     )
+    return pairs.select("query_id", "neighbor_id")
 
 
 def lsh_topk(
@@ -229,29 +234,15 @@ def lsh_topk(
     cand = lsh_candidates(
         vectors, queries, id_col, vec_col, dim, min_cos, target_recall, max_tables, seed
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", _norm_expr("qv"))
-    nv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    ).withColumn("nn", _norm_expr("nv"))
     # no explicit broadcast hint on the re-rank joins: the query-vector
     # table is only broadcast-safe when |Q| is small, and this is the
     # documented scale path — AQE picks broadcast at runtime when the
     # side's actual size fits autoBroadcastJoinThreshold
-    scored = (
-        cand.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine", F.round(_cosine_with_norms("qv", "nv", "qn", "nn"), 6))
+    scored = join_sides(
+        cand, _side(queries, id_col, vec_col), a="query_id", b="neighbor_id",
+        right=_side(vectors, id_col, vec_col),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored.withColumn("cosine", _cosine()), k)
 
 
 def make_ivf_probe_udf(centroids: np.ndarray, n_probe: int):
@@ -290,8 +281,6 @@ def train_ivf_centroids(
     xxhash64(id). Each Lloyd iteration is one narrow assignment UDF pass
     plus one native posexplode/groupBy mean — the classic scalable
     k-means shape (distributed E-step, tiny M-step)."""
-    from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
-
     # fan out single-row-group scans BEFORE the per-iteration UDF passes
     # (same rationale as the other Arrow-UDF operator entry points)
     v = ensure_min_parallelism(vectors).select(
@@ -354,8 +343,6 @@ def ivf_topk(
     cents = train_ivf_centroids(vectors, id_col, vec_col, n_cells, train_iters, seed)
     post1 = make_ivf_probe_udf(cents, 1)
     postp = make_ivf_probe_udf(cents, n_probe)
-    from sbb_ned_spark.functions.partitioning import ensure_min_parallelism
-
     v = ensure_min_parallelism(vectors).select(
         F.col(id_col).alias("neighbor_id"),
         F.element_at(post1(F.col(vec_col)), 1).alias("cell"),
@@ -364,31 +351,16 @@ def ivf_topk(
         F.col(id_col).alias("query_id"),
         F.explode(postp(F.col(vec_col))).alias("cell"),
     )
-    cand = (
-        q.join(v, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
+    cand = posting_pairs(
+        q, "cell", v, a="query_id", b="neighbor_id",
+        where=F.col("query_id") != F.col("neighbor_id"),
+        combine=True,
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", _norm_expr("qv"))
-    nv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    ).withColumn("nn", _norm_expr("nv"))
-    scored = (
-        cand.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine", F.round(_cosine_with_norms("qv", "nv", "qn", "nn"), 6))
+    scored = join_sides(
+        cand, _side(queries, id_col, vec_col), a="query_id", b="neighbor_id",
+        right=_side(vectors, id_col, vec_col),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored.withColumn("cosine", _cosine()), k)
 
 
 def embedding_near_dup_pairs(
@@ -410,26 +382,12 @@ def embedding_near_dup_pairs(
     pair (pinned by a pytest gate vs the brute-force baseline)."""
     n_planes, n_tables = hyperplane_lsh_params(tau, target_recall, max_tables)
     keyed = _with_table_buckets(
-        vectors, id_col, vec_col, dim, n_planes, n_tables, seed, "id"
+        vectors, id_col, vec_col, dim, n_planes, n_tables, seed, "id_a"
     )
-    l = keyed.select("table", "bucket", F.col("id").alias("id_a"))
-    r = keyed.select("table", "bucket", F.col("id").alias("id_b"))
-    cand = (
-        l.join(r, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = vectors.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-    ).withColumn("na", _norm_expr("va"))
-    vb = vectors.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-    ).withColumn("nb", _norm_expr("vb"))
+    cand = posting_pairs(keyed, ["table", "bucket"], combine=True)
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", F.round(_cosine_with_norms("va", "vb", "na", "nb"), 6))
+        join_sides(cand, _side(vectors, id_col, vec_col))
+        .withColumn("cosine", _cosine())
         .filter(F.col("cosine") >= tau)
         .select("id_a", "id_b", "cosine")
     )

@@ -446,13 +446,9 @@ def run_pipeline(
 def pairwise_f1(clusters: DataFrame, labeled_pairs: DataFrame) -> dict:
     """Predict 'same entity' iff both ids land in the same cluster; score
     against labeled pairs (the HIPE-scorer analog, SURVEY.md §5.1)."""
-    ca = clusters.select(
-        F.col("record_id").alias("id_a"), F.col("cluster_id").alias("cl_a")
+    joined = blocking.join_sides(
+        labeled_pairs, clusters.select("record_id", F.col("cluster_id").alias("cl")), "record_id"
     )
-    cb = clusters.select(
-        F.col("record_id").alias("id_b"), F.col("cluster_id").alias("cl_b")
-    )
-    joined = labeled_pairs.join(ca, "id_a").join(cb, "id_b")
     agg = joined.agg(
         F.sum(((F.col("cl_a") == F.col("cl_b")) & (F.col("label") == 1)).cast("int")).alias("tp"),
         F.sum(((F.col("cl_a") == F.col("cl_b")) & (F.col("label") == 0)).cast("int")).alias("fp"),

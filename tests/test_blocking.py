@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from sbb_ned_spark.config import PipelineConfig
 from sbb_ned_spark.operators import blocking
@@ -240,3 +242,125 @@ def test_fused_udf_matches_perrow_reference(spark):
         assert list(got["token_set"][i]) == np.unique(
             (u & np.uint64(0xFFFFFFFF)).astype(np.int64)
         ).astype(np.int32).tolist(), f"row {i} token_set"
+
+
+def _ref_candidate_pairs(posting, k: int, kf: int, min_shared: int, flagged: bool):
+    """Pure-pandas candidate_pairs over (key, record_id[, is_new]) rows,
+    written from the documented rules: shared-key count on id_a < id_b
+    (old-old pairs dropped when flagged) with the evidence floor; rank_a
+    by evidence desc, id_b asc; prune at rank_a <= max(k, kf); rank_b over
+    the pruned set by evidence desc, id_a desc; then a pair survives when
+    (rank_a <= k and rank_b <= kf) or (rank_b <= k and rank_a <= kf)."""
+    m = posting.merge(posting, on="key", suffixes=("_a", "_b"))
+    m = m[m["record_id_a"] < m["record_id_b"]]
+    if flagged:
+        m = m[m["is_new_a"] | m["is_new_b"]]
+    n = m.groupby(["record_id_a", "record_id_b"]).size().reset_index(name="n")
+    n.columns = ["id_a", "id_b", "n"]
+    n = n[n["n"] >= min_shared]
+
+    def rank(df, part, partner, partner_asc):
+        order = df.sort_values([part, "n", partner], ascending=[True, False, partner_asc])
+        return order.groupby(part).cumcount().add(1).reindex(df.index)
+
+    n = n.assign(rank_a=rank(n, "id_a", "id_b", True))
+    n = n[n["rank_a"] <= max(k, kf)]
+    n = n.assign(rank_b=rank(n, "id_b", "id_a", False))
+    keep = ((n["rank_a"] <= k) & (n["rank_b"] <= kf)) | (
+        (n["rank_b"] <= k) & (n["rank_a"] <= kf)
+    )
+    return set(zip(n.loc[keep, "id_a"], n.loc[keep, "id_b"]))
+
+
+@st.composite
+def _posting_draw(draw):
+    """Small random postings: 2-byte binary ids (high bytes >= 0x80 test
+    unsigned order), a few random keys per record, plus one block whose
+    members all hold the same extra keys (equal evidence, so the
+    tie-breaks decide)."""
+    ids = draw(st.lists(st.integers(0, 0xFFFF), min_size=2, max_size=9, unique=True))
+    ids = [v.to_bytes(2, "big") for v in ids]
+    block = draw(st.sets(st.sampled_from(ids), min_size=2))
+    n_block_keys = draw(st.integers(1, 3))
+    rows = []
+    for rid in ids:
+        keys = draw(st.sets(st.integers(0, 4), max_size=3))
+        if rid in block:
+            keys = keys | {100 + j for j in range(n_block_keys)}
+        new = draw(st.booleans())
+        rows += [(key, rid, new) for key in sorted(keys)]
+    return rows
+
+
+@settings(max_examples=6, derandomize=True, deadline=None)
+# an evidence floor of 2 with a pair sharing one key, which the
+# derandomized draws do not reach on their own
+@example(
+    rows=[(1, b"\x00\x01", False), (2, b"\x00\x01", False), (1, b"\x80\x00", False),
+          (2, b"\x80\x00", False), (1, b"\x00\x02", False)],
+    k=2, kf=2, min_shared=2, flagged=False,
+)
+@given(
+    rows=_posting_draw(),
+    k=st.integers(1, 4),
+    kf=st.integers(1, 4),
+    min_shared=st.integers(1, 3),
+    flagged=st.booleans(),
+)
+def test_candidate_pairs_property_matches_pandas_reference(
+    spark, rows, k, kf, min_shared, flagged
+):
+    """For drawn postings and caps (max_fan_in < k included), the pair
+    set equals the pandas reference of the documented survival rule, and
+    no record holds more than max(k, kf) pairs in either orientation."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["key", "record_id", "is_new"])
+    posting = spark.createDataFrame(pdf, "key long, record_id binary, is_new boolean")
+    cfg = PipelineConfig(
+        max_candidates_per_record=k, max_fan_in=kf, min_shared_keys=min_shared
+    )
+    pairs = blocking.candidate_pairs(posting, cfg, delta_flag="is_new" if flagged else None)
+    got = [(bytes(r.id_a), bytes(r.id_b)) for r in pairs.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _ref_candidate_pairs(pdf, k, kf, min_shared, flagged)
+    for side in (0, 1):
+        per = pd.Series([p[side] for p in got], dtype=object).value_counts()
+        assert per.empty or per.max() <= max(k, kf)
+
+
+@pytest.mark.parametrize("combine", [False, True])
+def test_posting_pairs_matches_counter_reference(spark, combine):
+    """posting_pairs equals a Counter over the key join, for the
+    self-join (default a < b), a two-sided join with its own id names,
+    and a self-join kept in both orientations (a != b), with and without
+    the map-side combine."""
+    from collections import Counter
+
+    left = [(1, "r1"), (2, "r1"), (1, "r2"), (2, "r2"), (3, "r2"), (3, "r3"), (1, "r3")]
+    left.append((4, "r4"))
+    right = [(1, "r1"), (3, "r1"), (3, "r5"), (2, "r3"), (1, "r2"), (5, "r6")]
+
+    def ref(lrows, rrows, keep):
+        return dict(
+            Counter((ia, ib) for ka, ia in lrows for kb, ib in rrows if ka == kb and keep(ia, ib))
+        )
+
+    def got(df, a="id_a", b="id_b"):
+        return {(r[a], r[b]): r["n_shared_keys"] for r in df.collect()}
+
+    L = spark.createDataFrame(left, ["key", "id_a"])
+    assert got(blocking.posting_pairs(L, "key", combine=combine)) == ref(
+        left, left, lambda a, b: a < b
+    )
+    q = spark.createDataFrame(left, ["key", "query_id"])
+    v = spark.createDataFrame(right, ["key", "neighbor_id"])
+    two = blocking.posting_pairs(
+        q, "key", v, a="query_id", b="neighbor_id",
+        where=F.col("query_id") != F.col("neighbor_id"), combine=combine,
+    )
+    assert got(two, "query_id", "neighbor_id") == ref(left, right, lambda a, b: a != b)
+    both = blocking.posting_pairs(
+        L, "key", where=F.col("id_a") != F.col("id_b"), combine=combine
+    )
+    assert got(both) == ref(left, left, lambda a, b: a != b)

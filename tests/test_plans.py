@@ -166,3 +166,44 @@ def test_repetition_stats_partial_aggregates_map_side(spark):
     assert plan.count("HashAggregate") >= 2
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _hash_exchanges(plan: str, first_key: str) -> list[list[str]]:
+    """Key lists of the plan's hashpartitioning exchanges led by ``first_key``."""
+    import re
+
+    keys = [
+        re.findall(r"(\w+)#\d+", m)
+        for m in re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
+    ]
+    return [k for k in keys if k[:1] == [first_key]]
+
+
+@pytest.mark.parametrize(
+    "query, keys",
+    [("dedup_minhash_lsh", ["id_a"]), ("embedding_near_dup", ["id_a", "id_b"])],
+)
+def test_near_dup_pair_stream_has_one_exchange(spark, query, keys):
+    """The near-dup pairs cross ONE pair-stream exchange in
+    blocking.posting_pairs, and the verify's join-back adds none: on id_a
+    alone for MinHash bands, on (id_a, id_b) after a map-side count for
+    the hyperplane-LSH tables."""
+    ex = _hash_exchanges(_formatted(spark, em.queries()[query](spark, SF)), "id_a")
+    assert ex == [keys], ex
+
+
+@pytest.mark.parametrize("query", ["ann_lsh_topk", "ann_ivf_topk"])
+def test_ann_pairs_take_composite_exchange_and_own_window_exchange(spark, query):
+    """The ANN candidate pairs go through posting_pairs(combine=True): a
+    map-side count before ONE composite (query_id, neighbor_id) exchange,
+    so the cosine verify spreads over pairs, not queries; the top-k window
+    then takes its own query_id exchange."""
+    ex = _hash_exchanges(_formatted(spark, em.queries()[query](spark, SF)), "query_id")
+    assert sorted(ex) == [["query_id"], ["query_id", "neighbor_id"]], ex
+
+
+def test_simhash_pairs_carry_sig_without_join_back(spark):
+    """SimHash posts (id, sig) structs, so the Hamming verify reads both
+    sigs off the pair row: the chunk self-join is the plan's only join."""
+    tree = _formatted(spark, em.queries()["dedup_simhash"](spark, SF)).split("\n\n")[0]
+    assert sum("Join" in line for line in tree.splitlines()) == 1, tree
