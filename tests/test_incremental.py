@@ -316,3 +316,80 @@ def test_ingest_refuses_bootstrap_over_swap_artifacts(spark, tiny_files, tmp_pat
     assert catalog.read_manifest("clusters") is None
     with pytest.raises(ValueError, match="swap artifact"):
         er_ingest.ingest_batch(b, cfg)
+
+
+class _Crash(Exception):
+    """A simulated process death at one durable action."""
+
+
+# every durable action of the state update, counted at the outermost call
+# (ParquetCatalog.drop_table's own rmtree is part of the drop)
+def _durable_actions():
+    import os
+    import shutil
+
+    from sbb_ned_spark.sources.catalog import ParquetCatalog
+
+    return (
+        (ParquetCatalog, "write_table"),
+        (ParquetCatalog, "write_manifest"),
+        (ParquetCatalog, "drop_table"),
+        (os, "rename"),
+        (shutil, "rmtree"),
+    )
+
+
+def _ingest_both(a, b, cfg, monkeypatch, crash_at=None) -> int:
+    """ingest_batch(a) then ingest_batch(b), raising _Crash before the
+    ``crash_at``-th durable action (1-based). Returns the action count."""
+    from sbb_ned_spark.streaming import er_ingest
+
+    n, depth = 0, 0
+    with monkeypatch.context() as m:
+        for owner, attr in _durable_actions():
+
+            def counted(*args, _fn=getattr(owner, attr), **kwargs):
+                nonlocal n, depth
+                if depth:
+                    return _fn(*args, **kwargs)
+                n += 1
+                if n == crash_at:
+                    raise _Crash(n)
+                depth += 1
+                try:
+                    return _fn(*args, **kwargs)
+                finally:
+                    depth -= 1
+
+            m.setattr(owner, attr, counted)
+        er_ingest.ingest_batch(a, cfg)
+        er_ingest.ingest_batch(b, cfg)
+    return n
+
+
+def test_every_crash_point_recovers_on_retry(spark, tiny_files, tmp_path, monkeypatch):
+    """Crash before each durable action of a bootstrap ingest_batch(a)
+    followed by an incremental ingest_batch(b), for every action in turn;
+    rerunning both calls must give the clusters of run_pipeline(a ∪ b), or
+    the documented ValueError."""
+    from sbb_ned_spark.sources.catalog import get_catalog
+    from sbb_ned_spark.streaming import er_ingest
+
+    a, b = _split(tiny_files, 10, 7)
+    full = P.run_pipeline(tiny_files, PipelineConfig())
+    want = _assign(full.clusters)
+    full.unpersist_all()
+
+    n_actions = _ingest_both(a, b, PipelineConfig(checkpoint_dir=str(tmp_path / "clean")), monkeypatch)
+    assert n_actions > 10
+    for i in range(1, n_actions + 1):
+        cfg = PipelineConfig(checkpoint_dir=str(tmp_path / f"crash{i}"))
+        with pytest.raises(_Crash):
+            _ingest_both(a, b, cfg, monkeypatch, crash_at=i)
+        try:
+            er_ingest.ingest_batch(a, cfg)
+            er_ingest.ingest_batch(b, cfg)
+        except ValueError:
+            continue
+        clusters = get_catalog(spark, cfg.checkpoint_dir).read_table(spark, "clusters")
+        assert _assign(clusters) == want, i
