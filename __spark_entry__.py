@@ -1223,7 +1223,7 @@ def q_er_incremental(spark, sf):
     h = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10))
     base_files, batch = files.filter(h < 7), files.filter(h >= 7)
     # fresh state root per call (deterministic output; the returned frame
-    # scans the swapped clusters table, so the dir must outlive the query
+    # scans the committed clusters segment, so the dir must outlive the query
     # — registered for interpreter-exit cleanup so repeated driver/oracle
     # runs don't accumulate checkpoint trees in /tmp, ADVICE r5 low #2)
     import atexit

@@ -177,7 +177,7 @@ def connected_components(
         # Defense-in-depth against a stale pre-binary-refactor checkpoint
         # (ADVICE r4 #2): string ids reaching the binary path would be
         # double-hexed downstream and every record would silently become a
-        # singleton cluster. The manifest format version is the primary
+        # singleton cluster. The commit's format version is the primary
         # gate; this plan-time type assert makes the failure loud even for
         # callers that bypass the catalog.
         from pyspark.sql.types import BinaryType
@@ -226,6 +226,13 @@ def connected_components(
             # saving two window shuffles + a distinct per CC call).
             if _converged_star_form(cur):
                 break
+        else:
+            # labelling from a graph that is not yet a star forest would
+            # split a component into several clusters: fail loudly instead
+            raise RuntimeError(
+                f"connected_components: not converged after {n_iter} rounds "
+                f"(cc_max_iterations={config.cc_max_iterations})"
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 

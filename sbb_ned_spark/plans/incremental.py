@@ -19,9 +19,11 @@ share blocking evidence with B — never |A|²:
    to records in a delta pair), and partial CC (only clusters an accepted
    delta edge touches re-enter, as star edges; the rest pass through).
    Each delta stage is an eager ``localCheckpoint`` snapshot.
-6. state update    — features and exact-dup membership are APPENDED,
-   clusters is atomically replaced, and the pair-level stage manifests
-   are invalidated (their tables describe A only). A later full
+6. state update    — one commit: B's features and exact-dup membership
+   are written as new segments and listed next to the old ones, clusters
+   is a new segment that replaces the old, and the pair-level stages are
+   dropped (their tables describe A only). Every crash leaves the old
+   commit or the new one, so a retry recovers on its own. A later full
    ``run_pipeline(resume=True)`` over A ∪ B therefore reuses
    exact_groups/features and recomputes only the pair stages, landing on
    the same PARTITION — its labels follow the representative-minimum
@@ -44,10 +46,7 @@ at all — its lookup re-queries the whole Annoy index per batch
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,91 +55,43 @@ from pyspark.sql.window import Window
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
 from sbb_ned_spark.operators.blocking import with_ids
 from sbb_ned_spark.plans.pipeline import (
-    STAGES,
+    STAGE_FORMAT_VERSION,
     PipelineResult,
     Prior,
     _config_hash,
     _duplicate_id,
     _expand_members,
-    _manifest,
-    _valid_manifest,
     resolve,
 )
-from sbb_ned_spark.sources.catalog import ParquetCatalog, TableCatalog, get_catalog
-
-# the chain an incremental update leaves behind (pair-level stages are
-# invalidated — they describe the PRE-increment corpus)
-_STATE_CHAIN = ("exact_groups", "features", "clusters")
+from sbb_ned_spark.sources.catalog import TableCatalog, get_catalog, segment_name
 
 
-def _validate_state(catalog: TableCatalog, config: PipelineConfig) -> None:
-    """The checkpoint root must hold a complete, config-matching state:
-    either a full run_pipeline chain or a previous incremental chain.
-    Walks manifests with the same chained-digest rule resume uses — a
-    stale or mixed-config state fails loudly here, before any compute."""
-    cfg_hash = _config_hash(config)
-    for chain in (_STATE_CHAIN, STAGES):
-        upstream = None
-        for stage in chain if config.collapse_exact_dups else chain[1:]:
-            upstream = _valid_manifest(catalog, stage, cfg_hash, upstream)
-            if upstream is None:
-                break
-        else:
-            return
-    raise ValueError(
-        "incremental_update: no valid prior state under "
-        f"{config.checkpoint_dir!r} (need a completed run_pipeline or "
-        "incremental_update under the SAME config; a config change "
-        "requires a full rebuild)"
-    )
-
-
-def _replace_table(
-    catalog: TableCatalog, spark, df: DataFrame, name: str, manifest: dict | None = None
-) -> None:
-    """Atomically replace a table the new contents were COMPUTED FROM.
-
-    Parquet cannot overwrite a directory a plan is still reading (the
-    old files vanish mid-scan), so the parquet backend stages to
-    ``<name>__staged`` and directory-swaps after the write completes.
-    Iceberg overwrites in place — readers pin the prior snapshot.
-
-    Crash-consistency (ADVICE r5 high+medium): ``manifest`` — normally
-    the caller's in-progress INVALID manifest — is pre-written into the
-    STAGED directory so the post-swap table carries it in the same
-    rename as the data, and the swap is rename-aside
-    (``mv dst dst__old; mv staged dst; rm dst__old``): a
-    manifest-bearing directory exists at every instant except the
-    microseconds between the two renames. That window is closed by the
-    consumer side: ``er_ingest.ingest_batch`` refuses to bootstrap while
-    a ``<name>__old`` / ``<name>__staged`` manifest exists."""
-    if isinstance(catalog, ParquetCatalog):
-        staged = f"{name}__staged"
-        catalog.drop_table(spark, staged)
-        catalog.write_table(df, staged)
-        if manifest is not None:
-            catalog.write_manifest(staged, manifest)
-        src, dst = catalog._path(staged), catalog._path(name)
-        old = catalog._path(f"{name}__old")
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        catalog.write_table(df, name)
-        if manifest is not None:
-            catalog.write_manifest(name, manifest)
-
-
-def _invalidate_stage(catalog: TableCatalog, spark, stage: str) -> None:
-    """Drop a stale pair-level stage and leave a manifest that can never
-    validate (no config_hash), so resume recomputes it."""
-    catalog.drop_table(spark, stage)
-    catalog.write_manifest(
-        stage,
-        {"stage": stage, "invalidated_by": "incremental_update", "run_nonce": uuid.uuid4().hex},
-    )
+def _committed_state(catalog: TableCatalog, config: PipelineConfig) -> dict | None:
+    """The commit of a resolved state (one that lists clusters) built under
+    ``config`` and this ``STAGE_FORMAT_VERSION``; None when nothing has been
+    resolved yet (no commit, or a first run_pipeline that never reached
+    clusters). Any other state fails loudly, before any compute: a commit
+    under another config or format, or the per-stage manifest layout of
+    format 2."""
+    commit = catalog.read_commit()
+    if commit is None and catalog.old_layout():
+        raise ValueError(
+            f"state under {config.checkpoint_dir!r} has the old per-stage "
+            "_MANIFEST.json layout (format 2), which has no commit file; "
+            "rebuild it with run_pipeline"
+        )
+    if commit is None or "clusters" not in commit["tables"]:
+        return None
+    if commit["config_hash"] != _config_hash(config) or (
+        commit["format_version"] != STAGE_FORMAT_VERSION
+    ):
+        raise ValueError(
+            "incremental_update: no valid prior state under "
+            f"{config.checkpoint_dir!r} (need a completed run_pipeline or "
+            "incremental_update under the SAME config and format; a config "
+            "change requires a full rebuild)"
+        )
+    return commit
 
 
 def incremental_update(
@@ -150,27 +101,29 @@ def incremental_update(
     """Attach ``new_files`` to the checkpointed state in
     ``config.checkpoint_dir`` and return the updated clusters of A ∪ B.
 
-    Requires a completed prior run under the SAME config. Updates the
-    state in place (append features/membership, replace clusters), so
-    increments chain: A, then +B, then +C, ...
+    Requires a completed prior run under the SAME config. Commits the
+    updated state (features/membership gain a segment, clusters is
+    replaced), so increments chain: A, then +B, then +C, ...
     """
     if not config.checkpoint_dir:
         raise ValueError("incremental_update requires config.checkpoint_dir (the prior state)")
     spark = new_files.sparkSession
     catalog = get_catalog(spark, config.checkpoint_dir)
-    _validate_state(catalog, config)
-    cfg_hash = _config_hash(config)
+    commit = _committed_state(catalog, config)
+    if commit is None:
+        raise ValueError(
+            "incremental_update: no valid prior state under "
+            f"{config.checkpoint_dir!r} (no committed clusters; run run_pipeline first)"
+        )
     metrics: list[dict] = []
 
     def stage(name: str, build, partition_by: tuple = ()) -> DataFrame:
         # snapshot each delta stage with an EAGER localCheckpoint (all are
-        # |delta|-sized). persist() is not enough: the state update at the
-        # end APPENDS to the features table, and Spark's post-write path
-        # refresh invalidates every cached plan that scans that path — a
-        # merely-persisted scores frame would silently RECOMPUTE against
-        # the mutated state (the sha anti-join then sees the appended rows
-        # and the whole delta collapses to empty). The checkpoint cuts the
-        # file lineage, so the returned frames are immutable snapshots.
+        # |delta|-sized). persist() is not enough: the commit at the end
+        # drops the superseded clusters segment that the clusters and
+        # scores lineages scan, so an evicted cache block would recompute
+        # against a deleted table. The checkpoint cuts the file lineage,
+        # so the returned frames are immutable snapshots.
         t0 = time.monotonic()
         df = build()
         if name == "blocking_keys":
@@ -185,8 +138,8 @@ def incremental_update(
         )
         return df
 
-    old_feats = catalog.read_table(spark, "features")
-    old_clusters = catalog.read_table(spark, "clusters")
+    old_feats = catalog.read_committed(spark, "features", commit)
+    old_clusters = catalog.read_committed(spark, "clusters", commit)
 
     batch = with_ids(new_files)
     # loud id-space guard (mirrors run_pipeline's validate_unique_ids):
@@ -227,7 +180,7 @@ def incremental_update(
             lambda: adopted.unionByName(fresh.select("record_id", "rep_id")),
         )
         reps = fresh.filter(F.col("record_id") == F.col("rep_id")).drop("rep_id")
-        old_membership = catalog.read_table(spark, "exact_groups")
+        old_membership = catalog.read_committed(spark, "exact_groups", commit)
         rep_assign = old_clusters.join(
             old_membership.filter(F.col("record_id") == F.col("rep_id")).select("record_id"),
             "record_id",
@@ -261,39 +214,27 @@ def incremental_update(
     )
 
     # ---- 6. durable state update ----------------------------------------------
-    # ORDER MATTERS twice over. Read-consistency: `final` and `scores`
-    # lineages scan the CURRENT features/exact_groups/clusters tables
-    # lazily; both are checkpointed + counted above (stage), and clusters
-    # is staged-then-swapped, so every read of the old state completes
-    # before any table changes underneath. Crash-consistency (ADVICE r5
-    # high): the FIRST durable action marks the clusters manifest
-    # invalid, every table mutation happens under that mark (the swap
-    # installs the same invalid manifest with the new data), the stale
-    # pair-level stages are invalidated next, and the VALID chain
-    # manifests are written LAST (clusters last in _STATE_CHAIN). So no
-    # valid chain manifest ever coexists with a pre-increment pair-level
-    # stage, and a crash anywhere in between leaves a present-but-invalid
-    # clusters manifest: ingest_batch neither bootstraps nor validates,
-    # it raises, as documented.
-    in_progress = {
-        "stage": "clusters",
-        "invalidated_by": "incremental_update_in_progress",
-        "run_nonce": uuid.uuid4().hex,
-    }
-    catalog.write_manifest("clusters", in_progress)
-    _replace_table(catalog, spark, final, "clusters", manifest=in_progress)
-    part_by = ("repo_bucket",) if config.features_partition_buckets else ()
-    catalog.write_table(feats_b, "features", mode="append", partition_by=part_by)
-    if membership_new is not None:
-        catalog.write_table(membership_new, "exact_groups", mode="append")
-    for stage_name in ("blocking_keys", "candidate_pairs", "pair_scores"):
-        _invalidate_stage(catalog, spark, stage_name)
-    upstream = None
-    for stage_name in _STATE_CHAIN if config.collapse_exact_dups else _STATE_CHAIN[1:]:
-        upstream = _manifest(stage_name, cfg_hash, upstream, mode="incremental")
-        catalog.write_manifest(stage_name, upstream)
+    # new segments first, then one commit: it keeps the old features and
+    # exact_groups segments, adds the new ones, replaces clusters and
+    # drops the pair-level stages (they describe the old corpus). A crash
+    # before the commit leaves the old state whole; the leftover segments
+    # are dropped by the next commit.
+    version = commit["version"] + 1
+    tables = commit["tables"]
 
-    result_clusters = catalog.read_table(spark, "clusters")
+    def segment(df: DataFrame, name: str, partition_by: tuple = ()) -> list[str]:
+        seg = segment_name(name, version)
+        catalog.write_table(df, seg, partition_by=partition_by)
+        return [seg]
+
+    part_by = ("repo_bucket",) if config.features_partition_buckets else ()
+    new = {"features": tables["features"] + segment(feats_b, "features", part_by)}
+    if membership_new is not None:
+        new["exact_groups"] = tables["exact_groups"] + segment(membership_new, "exact_groups")
+    new["clusters"] = segment(final, "clusters")
+    catalog.commit(spark, {**commit, "version": version, "tables": new})
+
+    result_clusters = catalog.read_table(spark, new["clusters"][0])
     # delta frames are localCheckpoint snapshots, not persist()-cached —
     # their blocks are released when the RDDs are garbage-collected, so
     # there is nothing for unpersist_all() to free

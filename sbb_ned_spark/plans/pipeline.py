@@ -7,17 +7,18 @@ Replaces the reference's hand-wired queue pipeline
 (`/root/reference/qurator/sbb_ned/models/ned_lookup.py:159-173` — 7
 chained JobQueues) with four declarative DataFrame stages whose only
 barriers are Spark shuffles. Resumability (the reference's
-`start_iteration` analog, `embeddings/base.py:286-289`) is stage-level:
-each stage writes a parquet checkpoint + manifest; a re-run skips
-completed stages (north_rule: resumable from checkpoint).
+`start_iteration` analog, `embeddings/base.py:286-289`) is stage-level
+and rests on the catalog's one commit point: each stage is written as an
+immutable segment, then one atomically replaced commit file lists the
+stages so far. A crash leaves the last commit, and a resumed run reuses
+the longest committed prefix of the stages (north_rule: resumable from
+checkpoint).
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
-import uuid
 from dataclasses import asdict, dataclass, field
 from functools import partial
 from hashlib import sha256
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
 from sbb_ned_spark.operators import blocking, clustering, scoring
-from sbb_ned_spark.sources.catalog import TableCatalog, get_catalog, manifest_digest
+from sbb_ned_spark.sources.catalog import get_catalog, segment_name
 
 STAGES = (
     "exact_groups",
@@ -47,7 +48,9 @@ STAGES = (
 #      pair_scores checkpoint fed to connected_components(id_codec='binary')
 #      would double-hex its ids and silently singleton-ize every cluster
 #      (ADVICE r4 #2)
-STAGE_FORMAT_VERSION = 2
+#   3: immutable ``<stage>__v<N>`` segments named by one commit file, in
+#      place of per-stage ``<stage>/_MANIFEST.json`` directories
+STAGE_FORMAT_VERSION = 3
 
 
 @dataclass
@@ -73,43 +76,6 @@ def _config_hash(config: PipelineConfig) -> str:
     d = asdict(config)
     d.pop("checkpoint_dir", None)  # where the ckpt lives doesn't change WHAT it is
     return sha256(json.dumps(d, sort_keys=True, default=str).encode()).hexdigest()
-
-
-def _valid_manifest(
-    catalog: TableCatalog | None, stage: str, cfg_hash: str, upstream: dict | None
-) -> dict | None:
-    """The stage's stored manifest iff it matches the current config AND
-    chains to the upstream stage's manifest digest (a later-stage manifest
-    over a missing/changed earlier stage is stale, not resumable)."""
-    if catalog is None:
-        return None
-    m = catalog.read_manifest(stage)
-    if not m:
-        return None
-    if m.get("config_hash") != cfg_hash:
-        return None
-    # a manifest written before STAGE_FORMAT_VERSION existed has no
-    # format_version key -> treated as v-unknown -> not resumable
-    if m.get("format_version") != STAGE_FORMAT_VERSION:
-        return None
-    if m.get("upstream_digest") != manifest_digest(upstream):
-        return None
-    return m
-
-
-def _manifest(stage: str, cfg_hash: str, upstream: dict | None, **extra) -> dict:
-    """A stage manifest chained to ``upstream``'s digest. The fresh nonce
-    per write makes any stage rebuilt this run (its inputs may have
-    drifted) invalidate every downstream manifest chained to the old
-    build."""
-    return {
-        "stage": stage,
-        "config_hash": cfg_hash,
-        "format_version": STAGE_FORMAT_VERSION,
-        "upstream_digest": manifest_digest(upstream),
-        "run_nonce": uuid.uuid4().hex,
-        **extra,
-    }
 
 
 def _duplicate_id(files: DataFrame):
@@ -303,26 +269,36 @@ def run_pipeline(
     pass).
 
     Checkpointing goes through the table-catalog seam
-    (:mod:`sbb_ned_spark.sources.catalog`): each stage is a named table
-    (Iceberg when the runtime is configured, parquet dirs otherwise) whose
-    manifest records the config hash and the upstream stage's manifest
-    digest — resume only reuses a stage whose whole upstream CHAIN is
-    intact and was built under the same config."""
+    (:mod:`sbb_ned_spark.sources.catalog`): each stage it computes is
+    written as a fresh segment (Iceberg when the runtime is configured,
+    parquet dirs otherwise) and then committed, the commit listing the
+    stages so far and dropping every later one. ``resume=True`` reuses
+    the longest prefix of the run's stages that a commit built under the
+    same config and ``STAGE_FORMAT_VERSION`` lists."""
     spark = files.sparkSession
     root = config.checkpoint_dir
     catalog = get_catalog(spark, root) if root else None
     cfg_hash = _config_hash(config)
+    commit = catalog.read_commit() if catalog else None
+    version = commit["version"] if commit else 0
+    done: dict[str, list[str]] = {}  # the stages this run's commits list
+    if resume and commit and commit["config_hash"] == cfg_hash and (
+        commit["format_version"] == STAGE_FORMAT_VERSION
+    ):
+        for name in STAGES if config.collapse_exact_dups else STAGES[1:]:
+            if name not in commit["tables"]:
+                break
+            done[name] = commit["tables"][name]
+    reused = set(done)
     metrics: list[dict] = []
     lineage_frames: list[DataFrame] = []
     persisted: list[DataFrame] = []
-    upstream: dict | None = None  # manifest of the previous stage
     n_files: int | None = None  # feature rows, the rows_in of later stages
 
     def stage(name: str, build, partition_by: tuple = ()) -> DataFrame:
-        nonlocal upstream, n_files
-        if resume and (m := _valid_manifest(catalog, name, cfg_hash, upstream)):
-            upstream = m
-            df = catalog.read_table(spark, name)
+        nonlocal version, n_files
+        if name in reused:
+            df = catalog.read_committed(spark, name, commit)
             if name == "features":
                 n_files = df.count()
             return df
@@ -331,17 +307,23 @@ def run_pipeline(
         if isinstance(df, tuple):
             df, hot = df
         hot_n = None if light or hot is None else hot.count()
-        manifest = _manifest(name, cfg_hash, upstream)
         if catalog is None:
             # no durable checkpoint requested: cache so the stage-boundary
             # count() and downstream stages don't recompute the UDF lineage
             df = df.persist()
             persisted.append(df)
         else:
-            catalog.write_table(df, name, partition_by=partition_by)
-            catalog.write_manifest(name, manifest)
-            df = catalog.read_table(spark, name)
-        upstream = manifest
+            version += 1
+            seg = segment_name(name, version)
+            catalog.write_table(df, seg, partition_by=partition_by)
+            done[name] = [seg]
+            catalog.commit(spark, {
+                "version": version,
+                "config_hash": cfg_hash,
+                "format_version": STAGE_FORMAT_VERSION,
+                "tables": done,
+            })
+            df = catalog.read_table(spark, seg)
         n = df.count() if not light or root or name in _COUNTED else None
         row = {
             "stage": name,
@@ -426,13 +408,12 @@ def run_pipeline(
     _, scores, clusters = resolve(files, config, stage, finish)
 
     if root:
-        with open(os.path.join(root, "metrics.json"), "w") as f:
-            json.dump(metrics, f, sort_keys=True, indent=1)
+        catalog.write_file("metrics.json", json.dumps(metrics, sort_keys=True, indent=1))
         if lineage_frames:
             lineage = lineage_frames[0]
             for lf in lineage_frames[1:]:
                 lineage = lineage.unionByName(lf)
-            lineage.write.mode("overwrite").parquet(os.path.join(root, "lineage"))
+            catalog.write_table(lineage, "lineage")
 
     return PipelineResult(
         clusters=clusters, scores=scores, metrics=metrics, persisted=persisted

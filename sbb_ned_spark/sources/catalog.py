@@ -14,6 +14,12 @@ TABLE NAME, so swapping storage is a catalog choice, not a code change:
 - :class:`ParquetCatalog` — the sandbox/default backend: ``<root>/<name>``
   parquet directories behind the same API, with ``partitionBy`` writes.
 
+Durable ER state lives here too, behind one commit point
+(:class:`_CommitPoint`): each stage table is written once as an immutable
+segment (``features__v3``), and one small ``_COMMIT.json`` swapped in with
+``os.replace`` lists the segments that make up the state. It is the only
+place the package renames, replaces or opens files for writing.
+
 The reference's analog of this seam is its sqlite DDL + secondary-index
 setup (`/root/reference/qurator/sbb_ned/cli.py:674-681`): a named,
 indexed table the rest of the code addresses by name only.
@@ -28,41 +34,89 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import uuid
 from dataclasses import dataclass
+from functools import reduce
 from hashlib import sha256
-from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
 
-class TableCatalog(Protocol):
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame: ...
-
-    def write_table(
-        self, df: DataFrame, name: str, mode: str = "overwrite", partition_by: tuple = ()
-    ) -> None: ...
-
-    def table_exists(self, spark: SparkSession, name: str) -> bool: ...
-
-    def drop_table(self, spark: SparkSession, name: str) -> None: ...
-
-    def write_manifest(self, name: str, manifest: dict) -> None: ...
-
-    def read_manifest(self, name: str) -> dict | None: ...
+COMMIT_FILE = "_COMMIT.json"
+# a segment is one immutable write of a state table: ``<table>__v<version>``,
+# also a valid Iceberg identifier
+_SEGMENT = re.compile(r"[a-z_]+__v[0-9]+")
 
 
-def manifest_digest(manifest: dict | None) -> str:
-    """Stable digest of a stage manifest — chained into the downstream
-    stage's manifest so resume can prove the upstream it was built from."""
-    if manifest is None:
-        return "none"
-    return sha256(json.dumps(manifest, sort_keys=True).encode()).hexdigest()
+def segment_name(table: str, version: int) -> str:
+    return f"{table}__v{version}"
+
+
+class _CommitPoint:
+    """The durable state's one commit point, shared by both backends.
+
+    ``_COMMIT.json`` in ``_meta`` (parquet: the root; Iceberg: its
+    manifest dir) names the state: ``version``, ``config_hash``,
+    ``format_version`` and ``tables``, the segment list per table. It is
+    written to a temp file and swapped in with ``os.replace``, so a reader
+    sees the old commit or the new one, never a torn one; readers read
+    only listed segments, and every commit drops each segment it does not
+    list, including those a crashed attempt left. ``os.replace`` is atomic
+    on a local or POSIX file system only, and the state has one writer."""
+
+    def write_file(self, name: str, text: str) -> None:
+        """Atomically write a small file next to the commit."""
+        os.makedirs(self._meta, exist_ok=True)
+        tmp = os.path.join(self._meta, f".{name}.{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())  # the content is on disk before the rename
+        os.replace(tmp, os.path.join(self._meta, name))
+
+    def read_commit(self) -> dict | None:
+        p = os.path.join(self._meta, COMMIT_FILE)
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return json.load(f)
+
+    def commit(self, spark: SparkSession, commit: dict) -> None:
+        self.write_file(COMMIT_FILE, json.dumps(commit, sort_keys=True))
+        self.drop_unlisted(spark, commit)
+
+    def drop_unlisted(self, spark: SparkSession, commit: dict) -> None:
+        listed = {s for segs in commit["tables"].values() for s in segs}
+        for name in self.segments(spark):
+            if name not in listed:
+                self.drop_table(spark, name)
+
+    def read_committed(
+        self, spark: SparkSession, table: str, commit: dict | None = None
+    ) -> DataFrame:
+        """The union of ``table``'s segments listed in ``commit`` (default:
+        the current one)."""
+        segs = (commit or self.read_commit())["tables"][table]
+        return reduce(DataFrame.unionByName, [self.read_table(spark, s) for s in segs])
+
+    def old_layout(self) -> bool:
+        """True for a state of the per-stage manifest layout (format 2),
+        which this code does not read."""
+        return any(
+            os.path.exists(p)
+            for name in ("features", "clusters")
+            for p in (
+                os.path.join(self._meta, name, "_MANIFEST.json"),
+                os.path.join(self._meta, f"{name}.json"),
+            )
+        )
 
 
 @dataclass
-class ParquetCatalog:
+class ParquetCatalog(_CommitPoint):
     """Name-addressed parquet directories under ``root``.
 
     ``codec`` is the parquet compression for stage checkpoints: zstd by
@@ -120,40 +174,32 @@ class ParquetCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._path(name))
 
-    def table_exists(self, spark: SparkSession, name: str) -> bool:
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS")) or os.path.exists(
-            os.path.join(self._path(name), "_MANIFEST.json")
-        )
-
     def drop_table(self, spark: SparkSession, name: str) -> None:
         shutil.rmtree(self._path(name), ignore_errors=True)
 
-    def write_manifest(self, name: str, manifest: dict) -> None:
-        os.makedirs(self._path(name), exist_ok=True)
-        with open(os.path.join(self._path(name), "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f, sort_keys=True)
+    @property
+    def _meta(self) -> str:
+        return self.root
 
-    def read_manifest(self, name: str) -> dict | None:
-        p = os.path.join(self._path(name), "_MANIFEST.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+    def segments(self, spark: SparkSession) -> list[str]:
+        if not os.path.isdir(self.root):
+            return []
+        return [n for n in os.listdir(self.root) if _SEGMENT.fullmatch(n)]
 
 
 @dataclass
-class IcebergCatalog:
+class IcebergCatalog(_CommitPoint):
     """Iceberg tables addressed as ``<catalog>.<namespace>.<name>``.
 
     Requires ``iceberg-spark-runtime`` on the classpath and
     ``spark.sql.catalog.<catalog>`` configured (e.g. a HadoopCatalog with a
-    local warehouse dir). Manifests are JSON files under ``manifest_dir``
-    (resume metadata is ours, not table data).
+    local warehouse dir). The commit file lives under ``manifest_dir``
+    (state metadata is ours, not table data).
 
     Use :func:`for_root` rather than the bare constructor: the namespace
     and manifest dir are derived from the logical root so two pipelines
     with different checkpoint/data roots can NEVER collide in the same
-    tables or resume from each other's manifests."""
+    tables or resume from each other's commits."""
 
     catalog: str = "local"
     namespace: str = "er"
@@ -196,23 +242,22 @@ class IcebergCatalog:
                 "write.parquet.compression-codec", self.codec
             ).createOrReplace()
 
-    def table_exists(self, spark: SparkSession, name: str) -> bool:
-        return spark.catalog.tableExists(self._fqn(name))
-
     def drop_table(self, spark: SparkSession, name: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {self._fqn(name)}")
 
-    def write_manifest(self, name: str, manifest: dict) -> None:
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        with open(os.path.join(self.manifest_dir, f"{name}.json"), "w") as f:
-            json.dump(manifest, f, sort_keys=True)
+    @property
+    def _meta(self) -> str:
+        return self.manifest_dir
 
-    def read_manifest(self, name: str) -> dict | None:
-        p = os.path.join(self.manifest_dir, f"{name}.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+    def segments(self, spark: SparkSession) -> list[str]:
+        ns = f"{self.catalog}.{self.namespace}"
+        if not spark.catalog.databaseExists(ns):
+            return []
+        return [t.name for t in spark.catalog.listTables(ns) if _SEGMENT.fullmatch(t.name)]
+
+
+# the backends share read/write/drop by name plus the commit point
+TableCatalog = ParquetCatalog | IcebergCatalog
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "local") -> bool:

@@ -6,7 +6,7 @@ a Structured Streaming file source over a landing directory, with each
 micro-batch resolved into the checkpointed pipeline state via
 ``foreachBatch``:
 
-- **first batch ever** (no ``clusters`` manifest under
+- **first batch ever** (no commit listing ``clusters`` under
   ``config.checkpoint_dir``): bootstrap with a full
   :func:`~sbb_ned_spark.plans.pipeline.run_pipeline`;
 - **every later batch**: :func:`~sbb_ned_spark.plans.incremental
@@ -25,11 +25,19 @@ micro-batch resolved into the checkpointed pipeline state via
 The two checkpoint roots are deliberately distinct: ``stream_ckpt_dir``
 holds Spark's source offsets/commit log (which FILES were consumed),
 ``config.checkpoint_dir`` holds the ER state tables (what they resolved
-to). Crash between the two is covered from both sides: state updated +
-offsets uncommitted → replay → no-op; offsets committed + state update
-incomplete → the manifest chain is broken and the next batch fails
-LOUDLY (see ``ingest_batch``) instead of silently resolving against a
-half-written state.
+to). The state has one commit point (the catalog's commit file), so a
+crash anywhere leaves the last committed state whole:
+
+- crash before the state commit → the old commit stands, the offsets are
+  uncommitted → the replayed batch is resolved again;
+- crash after the state commit, before the offset commit → replay → the
+  batch's records are all in the state → no-op;
+- crash during a bootstrap → no commit lists clusters yet → the retry
+  bootstraps again.
+
+Segments a crashed attempt left are dropped on the retry. What still
+fails loudly is a state this code cannot extend: a commit under another
+config or format, or the old per-stage manifest layout.
 
 The reference has no streaming (SURVEY.md §2.9); its closest shape is
 the resumable `start_iteration` scan loop
@@ -57,47 +65,30 @@ def ingest_batch(batch_df: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -
     Standalone-callable (and tested) — ``foreachBatch`` is just the
     streaming driver for it. Distinguishes three cases:
 
-    - no ``clusters`` manifest at all → bootstrap ``run_pipeline``;
-    - manifest present but the state chain invalid (mid-update crash,
-      config change) → raise: resolving new data against a half-written
-      or mismatched state would corrupt it silently, and the fix
-      (complete rebuild, or rerun under the original config) is an
-      operator decision;
-    - valid state → drop already-resolved record_ids (replay guard),
-      then ``incremental_update`` on the remainder (no-op if empty).
+    - no commit listing ``clusters`` → bootstrap ``run_pipeline``;
+    - a commit under another config or format, or the old layout → raise
+      (``incremental._committed_state``): the fix (a rebuild, or a rerun
+      under the original config) is an operator decision;
+    - a valid state → drop what a crashed attempt left, drop
+      already-resolved record_ids (replay guard), then
+      ``incremental_update`` on the remainder (no-op if empty).
     """
     if not config.checkpoint_dir:
         raise ValueError("ingest_batch requires config.checkpoint_dir (the ER state root)")
     spark = batch_df.sparkSession
     catalog = get_catalog(spark, config.checkpoint_dir)
-    if catalog.read_manifest("clusters") is None:
-        # Bootstrap ONLY when nothing suggests a prior state. A mid-swap
-        # crash in incremental_update._replace_table can leave the
-        # clusters dir momentarily absent but always leaves a
-        # manifest-bearing clusters__old / clusters__staged behind
-        # (ADVICE r5 medium) — bootstrapping over that would silently
-        # discard the prior corpus. A half-finished BOOTSTRAP, by
-        # contrast, never creates either artifact, so re-bootstrapping
-        # after a bootstrap crash still works.
-        for trace in ("clusters__old", "clusters__staged"):
-            if catalog.read_manifest(trace) is not None:
-                raise ValueError(
-                    "ingest_batch: no clusters manifest, but a mid-update "
-                    f"swap artifact exists ({trace}) — a crash interrupted "
-                    "incremental_update's state swap; inspect/repair the "
-                    "state root instead of bootstrap-overwriting it"
-                )
+    commit = I._committed_state(catalog, config)
+    if commit is None:
         res = P.run_pipeline(batch_df, config)
         n = next(
             (m["rows_out"] for m in res.metrics if m["stage"] == "clusters"), None
         )
         res.unpersist_all()
         return {"mode": "bootstrap", "clusters_rows": n, "stages": res.metrics}
-    # fails loudly on a broken/mismatched chain — never bootstrap-overwrite
-    I._validate_state(catalog, config)
+    catalog.drop_unlisted(spark, commit)
 
     batch = with_ids(batch_df)
-    seen = catalog.read_table(spark, "clusters").select("record_id")
+    seen = catalog.read_committed(spark, "clusters", commit).select("record_id")
     fresh = batch.join(seen, "record_id", "anti")
     if fresh.limit(1).isEmpty():
         return {"mode": "replay_noop", "batch_rows_dropped": batch.count()}

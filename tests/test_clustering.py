@@ -3,9 +3,30 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from sbb_ned_spark.config import PipelineConfig
 from sbb_ned_spark.operators.clustering import connected_components
+
+
+def union_find_min_root(nodes, edges) -> dict:
+    """Pure-Python reference CC: node -> the minimum node of its component
+    (union by smaller root, with path halving)."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
 
 
 def _run(spark, edges, nodes):
@@ -96,3 +117,72 @@ def test_cc_stops_at_true_fixpoint_iteration(spark):
     }
     n_iter = out.select("n_iter").first()["n_iter"]
     assert n_iter <= 3  # fingerprint-equality needed an extra confirm round
+
+
+def test_cc_fails_loudly_when_rounds_run_out(spark):
+    """A graph that needs more star rounds than cc_max_iterations allows
+    must raise, not label a half-converged edge set (which would split a
+    component into several clusters)."""
+    nodes = [f"n{i:02d}" for i in range(12)]
+    e = spark.createDataFrame([(nodes[i], nodes[i + 1]) for i in range(11)], ["id_a", "id_b"])
+    n = spark.createDataFrame([(x,) for x in nodes], ["record_id"])
+    full = connected_components(e, n, PipelineConfig())
+    assert full.select("n_iter").first()["n_iter"] >= 2
+    with pytest.raises(RuntimeError, match=r"after 1 rounds \(cc_max_iterations=1\)"):
+        connected_components(e, n, PipelineConfig(cc_max_iterations=1))
+
+
+@st.composite
+def _graphs(draw):
+    """(n_nodes, edges) over ids 0..n_nodes-1: a few components, each a
+    chain, star, clique or random forest, plus isolated nodes, under a
+    random relabelling and random edge orientation."""
+    n, edges = 0, []
+    for kind in draw(st.lists(st.sampled_from(["chain", "star", "clique", "forest"]), min_size=1, max_size=3)):
+        ids = list(range(n, n + draw(st.integers(1, 6))))
+        n += len(ids)
+        if kind == "chain":
+            edges += list(zip(ids, ids[1:]))
+        elif kind == "star":
+            edges += [(ids[0], x) for x in ids[1:]]
+        elif kind == "clique":
+            edges += [(x, y) for i, x in enumerate(ids) for y in ids[i + 1 :]]
+        else:
+            edges += [
+                (x, ids[draw(st.integers(0, j - 1))])
+                for j, x in enumerate(ids)
+                if j and draw(st.booleans())
+            ]
+    n += draw(st.integers(0, 3))
+    label = draw(st.permutations(range(n)))
+    edges = [(label[x], label[y]) if draw(st.booleans()) else (label[y], label[x]) for x, y in edges]
+    return n, edges
+
+
+@pytest.mark.parametrize("id_codec", ["string", "binary"])
+@settings(max_examples=8, derandomize=True, deadline=None)
+@example(graph=(7, [(6, 5), (5, 4), (4, 3), (3, 2), (2, 1), (1, 0)]))
+@given(graph=_graphs())
+def test_cc_property_matches_union_find(spark, id_codec, graph):
+    """On drawn chains, stars, cliques and forests with isolated nodes,
+    CC labels equal the union-find minimum-id root, under both id codecs,
+    within cc_max_iterations rounds."""
+    n, edges = graph
+    config = PipelineConfig()
+    if id_codec == "string":
+        key = lambda i: f"n{i:03d}"  # noqa: E731 - fixed width keeps the order numeric
+        edge_ids = [(key(x), key(y)) for x, y in edges]
+        schema = "id_a string, id_b string"
+    else:
+        key = lambda i: i.to_bytes(2, "big").hex()  # noqa: E731
+        edge_ids = [(bytes.fromhex(key(x)), bytes.fromhex(key(y))) for x, y in edges]
+        schema = "id_a binary, id_b binary"
+    out = connected_components(
+        spark.createDataFrame(edge_ids, schema),
+        spark.createDataFrame([(key(i),) for i in range(n)], "record_id string"),
+        config,
+        id_codec=id_codec,
+    ).collect()
+    want = union_find_min_root(range(n), edges)
+    assert {r["record_id"]: r["cluster_id"] for r in out} == {key(i): key(r) for i, r in want.items()}
+    assert all(r["n_iter"] <= config.cc_max_iterations for r in out)

@@ -229,113 +229,19 @@ def test_incremental_rejects_in_batch_duplicate_ids(spark, tiny_files, tmp_path)
         I.incremental_update(doubled, cfg)
 
 
-def test_crash_between_swap_and_appends_fails_loudly(spark, tiny_files, tmp_path, monkeypatch):
-    """ADVICE r5 high: a crash after the clusters swap but before the
-    features append must leave a PRESENT-but-INVALID clusters manifest —
-    the next ingest neither bootstraps (prior corpus preserved) nor
-    validates (inconsistent state), it raises."""
-    from sbb_ned_spark.sources.catalog import ParquetCatalog
-    from sbb_ned_spark.streaming import er_ingest
-
-    a, b = _split(tiny_files, 10, 7)
-    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
-    P.run_pipeline(a, cfg)
-
-    orig = ParquetCatalog.write_table
-
-    def crash_on_append(self, df, name, mode="overwrite", partition_by=()):
-        if name == "features" and mode == "append":
-            raise RuntimeError("simulated crash before the features append")
-        return orig(self, df, name, mode=mode, partition_by=partition_by)
-
-    monkeypatch.setattr(ParquetCatalog, "write_table", crash_on_append)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        I.incremental_update(b, cfg)
-    monkeypatch.undo()
-
-    # manifest is present (no bootstrap) but invalid (no silent resume)
-    from sbb_ned_spark.sources.catalog import get_catalog
-
-    catalog = get_catalog(spark, cfg.checkpoint_dir)
-    m = catalog.read_manifest("clusters")
-    assert m is not None and m.get("invalidated_by") == "incremental_update_in_progress"
-    with pytest.raises(ValueError):
-        I._validate_state(catalog, cfg)
-    with pytest.raises(ValueError):
-        er_ingest.ingest_batch(b, cfg)
-
-
-def test_pair_stages_invalid_before_valid_chain_manifests(
-    spark, tiny_files, tmp_path, monkeypatch
-):
-    """Crash instant: the first VALID chain manifest (features or
-    exact_groups) must only be written once the pre-increment pair-level
-    stages are already invalid — otherwise a crash right there leaves a
-    valid chain next to candidate_pairs/pair_scores of the old corpus."""
-    from sbb_ned_spark.sources.catalog import ParquetCatalog, get_catalog
-
-    a, b = _split(tiny_files, 10, 7)
-    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
-    P.run_pipeline(a, cfg)
-    catalog = get_catalog(spark, cfg.checkpoint_dir)
-    pair_stages = ("blocking_keys", "candidate_pairs", "pair_scores")
-    assert all("config_hash" in catalog.read_manifest(s) for s in pair_stages)
-
-    orig = ParquetCatalog.write_manifest
-
-    def crash_on_valid_chain(self, name, manifest):
-        if name in ("features", "exact_groups") and "config_hash" in manifest:
-            raise RuntimeError("simulated crash before the valid chain manifests")
-        return orig(self, name, manifest)
-
-    monkeypatch.setattr(ParquetCatalog, "write_manifest", crash_on_valid_chain)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        I.incremental_update(b, cfg)
-    monkeypatch.undo()
-
-    for s in pair_stages:
-        m = catalog.read_manifest(s)
-        assert "config_hash" not in m and m["invalidated_by"] == "incremental_update", s
-
-
-def test_ingest_refuses_bootstrap_over_swap_artifacts(spark, tiny_files, tmp_path):
-    """ADVICE r5 medium: the between-renames window of _replace_table can
-    leave no clusters dir but always leaves a manifest-bearing
-    clusters__old — ingest_batch must refuse to bootstrap over it."""
-    import shutil as sh
-
-    from sbb_ned_spark.sources.catalog import get_catalog
-    from sbb_ned_spark.streaming import er_ingest
-
-    a, b = _split(tiny_files, 10, 7)
-    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
-    P.run_pipeline(a, cfg)
-    catalog = get_catalog(spark, cfg.checkpoint_dir)
-    # simulate the crash instant between the two renames
-    sh.move(catalog._path("clusters"), catalog._path("clusters__old"))
-    assert catalog.read_manifest("clusters") is None
-    with pytest.raises(ValueError, match="swap artifact"):
-        er_ingest.ingest_batch(b, cfg)
-
-
 class _Crash(Exception):
     """A simulated process death at one durable action."""
 
 
-# every durable action of the state update, counted at the outermost call
-# (ParquetCatalog.drop_table's own rmtree is part of the drop)
+# every durable action on the state: a segment write, an atomic file
+# replace (the commit, and run_pipeline's metrics.json) and a segment drop
 def _durable_actions():
-    import os
-    import shutil
-
     from sbb_ned_spark.sources.catalog import ParquetCatalog
 
     return (
         (ParquetCatalog, "write_table"),
-        (ParquetCatalog, "write_manifest"),
+        (ParquetCatalog, "write_file"),
         (ParquetCatalog, "drop_table"),
-        (os, "rename"),
-        (shutil, "rmtree"),
     )
 
 
@@ -370,8 +276,8 @@ def _ingest_both(a, b, cfg, monkeypatch, crash_at=None) -> int:
 def test_every_crash_point_recovers_on_retry(spark, tiny_files, tmp_path, monkeypatch):
     """Crash before each durable action of a bootstrap ingest_batch(a)
     followed by an incremental ingest_batch(b), for every action in turn;
-    rerunning both calls must give the clusters of run_pipeline(a ∪ b), or
-    the documented ValueError."""
+    rerunning both calls must give the clusters of run_pipeline(a ∪ b)
+    and leave exactly the segments the final commit lists."""
     from sbb_ned_spark.sources.catalog import get_catalog
     from sbb_ned_spark.streaming import er_ingest
 
@@ -386,10 +292,9 @@ def test_every_crash_point_recovers_on_retry(spark, tiny_files, tmp_path, monkey
         cfg = PipelineConfig(checkpoint_dir=str(tmp_path / f"crash{i}"))
         with pytest.raises(_Crash):
             _ingest_both(a, b, cfg, monkeypatch, crash_at=i)
-        try:
-            er_ingest.ingest_batch(a, cfg)
-            er_ingest.ingest_batch(b, cfg)
-        except ValueError:
-            continue
-        clusters = get_catalog(spark, cfg.checkpoint_dir).read_table(spark, "clusters")
-        assert _assign(clusters) == want, i
+        er_ingest.ingest_batch(a, cfg)
+        er_ingest.ingest_batch(b, cfg)
+        catalog = get_catalog(spark, cfg.checkpoint_dir)
+        assert _assign(catalog.read_committed(spark, "clusters")) == want, i
+        listed = {s for segs in catalog.read_commit()["tables"].values() for s in segs}
+        assert set(catalog.segments(spark)) == listed, i

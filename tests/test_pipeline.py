@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -10,6 +11,7 @@ import pytest
 
 from sbb_ned_spark.config import PipelineConfig
 from sbb_ned_spark.plans import pipeline as P
+from sbb_ned_spark.sources.catalog import COMMIT_FILE, get_catalog
 
 
 def test_f1_gate_tiny(spark, tiny_files, tiny_truth):
@@ -47,9 +49,11 @@ def test_resume_from_checkpoint(spark, tiny_files, tiny_truth, tmp_path):
     res2 = P.run_pipeline(poisoned, cfg, resume=True)
     second = sorted((r["record_id"], r["cluster_id"]) for r in res2.clusters.collect())
     assert first == second
-    # all stage manifests present
-    manifests = glob.glob(str(tmp_path / "ckpt" / "*" / "_MANIFEST.json"))
-    assert len(manifests) == len(P.STAGES)
+    # one commit lists every stage, and the root holds only its segments
+    cat = get_catalog(spark, cfg.checkpoint_dir)
+    tables = cat.read_commit()["tables"]
+    assert sorted(tables) == sorted(P.STAGES)
+    assert sorted(cat.segments(spark)) == sorted(s for segs in tables.values() for s in segs)
 
 
 def test_resume_invalidated_by_config_change(spark, tiny_files, tmp_path):
@@ -65,20 +69,44 @@ def test_resume_invalidated_by_config_change(spark, tiny_files, tmp_path):
     assert [m["stage"] for m in res.metrics] == list(P.STAGES)
 
 
-def test_resume_invalidated_by_broken_chain(spark, tiny_files, tmp_path):
-    """A later-stage manifest over a missing earlier stage is stale: the
-    upstream-digest chain forces recomputation from the gap onward."""
-    import shutil
+def _edit_commit(spark, root: str, edit) -> None:
+    """Rewrite the state's commit file through ``edit(commit)``."""
+    cat = get_catalog(spark, root)
+    commit = cat.read_commit()
+    edit(commit)
+    cat.write_file(COMMIT_FILE, json.dumps(commit))
 
+
+def test_resume_invalidated_by_broken_chain(spark, tiny_files, tmp_path):
+    """A later stage listed over an unlisted earlier stage is stale: resume
+    reuses only the listed PREFIX and recomputes from the gap onward."""
     root = str(tmp_path / "ckpt")
     cfg = PipelineConfig(checkpoint_dir=root)
     P.run_pipeline(tiny_files, cfg)
-    shutil.rmtree(os.path.join(root, "candidate_pairs"))
+    _edit_commit(spark, root, lambda c: c["tables"].pop("candidate_pairs"))
     res = P.run_pipeline(tiny_files, cfg, resume=True)
     stages = [m["stage"] for m in res.metrics]
     # features/blocking_keys resumed; candidate_pairs and everything after
-    # it (its manifest chain broke) recomputed
+    # it (the gap in the listed prefix) recomputed
     assert stages == ["candidate_pairs", "pair_scores", "clusters"]
+
+
+def test_resume_from_commit_prefix(spark, tiny_files, tmp_path):
+    """A commit listing the stages up to candidate_pairs (a run that died
+    before pair_scores committed) resumes by recomputing exactly
+    pair_scores and clusters, to the same clusters."""
+    root = str(tmp_path / "ckpt")
+    cfg = PipelineConfig(checkpoint_dir=root)
+    first = sorted(tuple(r) for r in P.run_pipeline(tiny_files, cfg).clusters.collect())
+
+    def cut(commit):
+        for name in ("pair_scores", "clusters"):
+            commit["tables"].pop(name)
+
+    _edit_commit(spark, root, cut)
+    res = P.run_pipeline(tiny_files.limit(0), cfg, resume=True)
+    assert [m["stage"] for m in res.metrics] == ["pair_scores", "clusters"]
+    assert sorted(tuple(r) for r in res.clusters.collect()) == first
 
 
 def test_unpersist_all_releases_cached_stages(spark, tiny_files):
@@ -147,11 +175,12 @@ def test_features_table_partitioned_by_repo_bucket(spark, tiny_files, tmp_path):
     root = str(tmp_path / "ckpt")
     cfg = PipelineConfig(checkpoint_dir=root, features_partition_buckets=8)
     P.run_pipeline(tiny_files, cfg)
-    parts = glob.glob(os.path.join(root, "features", "repo_bucket=*"))
+    (seg,) = get_catalog(spark, root).read_commit()["tables"]["features"]
+    parts = glob.glob(os.path.join(root, seg, "repo_bucket=*"))
     assert len(parts) > 1
     # partition pruning: reading one bucket scans only that directory
-    one = spark.read.parquet(os.path.join(root, "features")).filter("repo_bucket = 0")
-    assert one.count() < spark.read.parquet(os.path.join(root, "features")).count()
+    one = spark.read.parquet(os.path.join(root, seg)).filter("repo_bucket = 0")
+    assert one.count() < spark.read.parquet(os.path.join(root, seg)).count()
 
 
 def test_parquet_catalog_roundtrip(spark, tmp_path):
@@ -159,13 +188,18 @@ def test_parquet_catalog_roundtrip(spark, tmp_path):
 
     cat = ParquetCatalog(str(tmp_path))
     df = spark.range(10).withColumn("b", F.pmod("id", F.lit(2)))
-    cat.write_table(df, "t1", partition_by=("b",))
-    assert cat.table_exists(spark, "t1")
-    assert cat.read_table(spark, "t1").count() == 10
-    cat.write_manifest("t1", {"stage": "t1", "config_hash": "x"})
-    assert cat.read_manifest("t1")["config_hash"] == "x"
-    cat.drop_table(spark, "t1")
-    assert not cat.table_exists(spark, "t1")
+    cat.write_table(df, "t__v1", partition_by=("b",))
+    cat.write_table(df, "t__v2")
+    assert sorted(cat.segments(spark)) == ["t__v1", "t__v2"]
+    assert cat.read_table(spark, "t__v1").count() == 10
+    # a commit lists segments; it drops every segment it does not list
+    assert cat.read_commit() is None
+    cat.commit(spark, {"version": 2, "tables": {"t": ["t__v2"]}})
+    assert cat.read_commit()["tables"] == {"t": ["t__v2"]}
+    assert cat.segments(spark) == ["t__v2"]
+    assert cat.read_committed(spark, "t").count() == 10
+    # the atomic writer leaves no temp file behind
+    assert not glob.glob(str(tmp_path / ".*.tmp"))
     # no iceberg runtime in this sandbox: the seam must fall back cleanly
     assert not iceberg_available(spark)
     assert isinstance(get_catalog(spark, str(tmp_path)), ParquetCatalog)
@@ -189,13 +223,13 @@ def test_iceberg_catalog_roundtrip_when_runtime_present(spark, tmp_path):
     if not iceberg_available(spark):
         pytest.skip("iceberg-spark-runtime not on the session classpath")
     df = spark.range(10).withColumn("b", F.pmod("id", F.lit(2)))
-    a.write_table(df, "t1", partition_by=("b",))
-    assert a.table_exists(spark, "t1")
-    assert a.read_table(spark, "t1").count() == 10
-    a.write_table(df.limit(3), "t1", mode="append")
-    assert a.read_table(spark, "t1").count() == 13
-    a.drop_table(spark, "t1")
-    assert not a.table_exists(spark, "t1")
+    a.write_table(df, "t__v1", partition_by=("b",))
+    assert a.segments(spark) == ["t__v1"]
+    assert a.read_table(spark, "t__v1").count() == 10
+    a.write_table(df.limit(3), "t__v1", mode="append")
+    assert a.read_table(spark, "t__v1").count() == 13
+    a.drop_table(spark, "t__v1")
+    assert a.segments(spark) == []
 
 
 def test_exact_collapse_preserves_clusters_and_shrinks_features(spark, tiny_files):
@@ -259,6 +293,23 @@ def test_every_config_field_is_read():
     assert unread == []
 
 
+def test_durable_writes_live_in_the_catalog():
+    """Plans and streaming never rename, replace or open files: every
+    durable write goes through sources/catalog.py, whose commit point and
+    atomic temp-plus-os.replace writer keep the state whole at any crash."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).parent.parent / "sbb_ned_spark"
+    found = [
+        f"{py.relative_to(pkg)}: {m.group(0)}"
+        for sub in ("plans", "streaming")
+        for py in (pkg / sub).rglob("*.py")
+        for m in re.finditer(r"\bos\.(?:rename|replace)\b|\bshutil\.|(?<![\w.])open\(", py.read_text())
+    ]
+    assert found == []
+
+
 # ---------------------------------------------------------------------------
 # Recall budget (VERDICT r3 ask #5): two rounds of speed-driven hash/band
 # changes spent bench recall 0.99905 -> 0.99814 against the 0.99 gate.
@@ -307,24 +358,16 @@ def test_bench_recall_floor(spark):
 
 
 def test_resume_invalidated_by_stage_format_version(spark, tiny_files, tmp_path):
-    """A checkpoint whose manifest predates STAGE_FORMAT_VERSION (or was
-    written by an older on-disk schema, e.g. string ids before the
-    binary-id refactor) must NOT be resumed (ADVICE r4 #2)."""
-    import json
-
+    """A commit written under another STAGE_FORMAT_VERSION (an older
+    on-disk schema, e.g. string ids before the binary-id refactor) must
+    NOT be resumed (ADVICE r4 #2): every stage recomputes."""
     root = str(tmp_path / "ckpt")
     cfg = PipelineConfig(checkpoint_dir=root)
     P.run_pipeline(tiny_files, cfg)
-    # simulate a pre-versioning manifest on pair_scores
-    mp = os.path.join(root, "pair_scores", "_MANIFEST.json")
-    with open(mp) as f:
-        m = json.load(f)
-    del m["format_version"]
-    with open(mp, "w") as f:
-        json.dump(m, f)
+    _edit_commit(spark, root, lambda c: c.update(format_version=P.STAGE_FORMAT_VERSION - 1))
     res = P.run_pipeline(tiny_files, cfg, resume=True)
     stages = [m["stage"] for m in res.metrics]
-    assert stages == ["pair_scores", "clusters"]
+    assert stages == list(P.STAGES)
 
 
 def test_duplicate_record_id_fails_loudly(spark, tiny_files):

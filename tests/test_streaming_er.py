@@ -38,7 +38,7 @@ def test_stream_resolve_batches_equal_rebuild(spark, tiny_files, tiny_truth, tmp
     )
     q.awaitTermination()
 
-    clusters = get_catalog(spark, cfg.checkpoint_dir).read_table(spark, "clusters")
+    clusters = get_catalog(spark, cfg.checkpoint_dir).read_committed(spark, "clusters")
     assert _assign(clusters) == want
     members, lp = tiny_truth
     quality = P.pairwise_f1(clusters, spark.createDataFrame(lp))
@@ -61,12 +61,12 @@ def test_stream_restart_processes_only_new_files(spark, tiny_files, tmp_path):
     offsets = str(tmp_path / "offsets")
     SE.stream_resolve(spark, landing, cfg, offsets, max_files_per_trigger=1).awaitTermination()
     cat = get_catalog(spark, cfg.checkpoint_dir)
-    n_before = cat.read_table(spark, "clusters").count()
+    n_before = cat.read_committed(spark, "clusters").count()
     assert n_before == ab.count()
 
     c.coalesce(1).write.mode("append").parquet(landing)
     SE.stream_resolve(spark, landing, cfg, offsets, max_files_per_trigger=1).awaitTermination()
-    clusters = cat.read_table(spark, "clusters")
+    clusters = cat.read_committed(spark, "clusters")
     assert _assign(clusters) == want
 
 
@@ -82,21 +82,44 @@ def test_ingest_batch_modes_and_replay(spark, tiny_files, tmp_path):
     assert out_b["mode"] == "incremental"
 
     cat = get_catalog(spark, cfg.checkpoint_dir)
-    before = _assign(cat.read_table(spark, "clusters"))
+    before = _assign(cat.read_committed(spark, "clusters"))
     replay = SE.ingest_batch(b, cfg)  # Spark re-delivers the same batch
     assert replay["mode"] == "replay_noop"
     assert replay["batch_rows_dropped"] == b.count()
-    assert _assign(cat.read_table(spark, "clusters")) == before
+    assert _assign(cat.read_committed(spark, "clusters")) == before
 
 
 def test_ingest_batch_refuses_broken_state(spark, tiny_files, tmp_path):
-    """A manifest chain broken mid-update must fail loudly — never
-    bootstrap-overwrite, never resolve against half-written state."""
+    """A committed state this code cannot extend (here: another on-disk
+    format version) must fail loudly — never bootstrap-overwrite, never
+    resolve against it."""
+    import json
+
+    from sbb_ned_spark.sources.catalog import COMMIT_FILE
+
     a, b = _split(tiny_files, 10, 7)
     cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "state"))
     SE.ingest_batch(a, cfg)
     cat = get_catalog(spark, cfg.checkpoint_dir)
-    # simulate the crash window: clusters manifest exists, upstream broken
-    cat.write_manifest("features", {"stage": "features", "broken": True})
+    commit = cat.read_commit()
+    commit["format_version"] = P.STAGE_FORMAT_VERSION - 1
+    cat.write_file(COMMIT_FILE, json.dumps(commit))
     with pytest.raises(ValueError, match="no valid prior state"):
         SE.ingest_batch(b, cfg)
+
+
+def test_ingest_batch_refuses_old_layout(spark, tiny_files, tmp_path):
+    """A state root of the per-stage manifest layout (format 2, no commit
+    file) is refused by name, by ingest_batch and incremental_update
+    alike — it is never bootstrapped over."""
+    from sbb_ned_spark.plans import incremental as I
+
+    root = tmp_path / "state"
+    (root / "clusters").mkdir(parents=True)
+    (root / "clusters" / "_MANIFEST.json").write_text('{"stage": "clusters"}')
+    cfg = PipelineConfig(checkpoint_dir=str(root))
+    with pytest.raises(ValueError, match="old per-stage _MANIFEST.json layout"):
+        SE.ingest_batch(tiny_files, cfg)
+    with pytest.raises(ValueError, match="old per-stage _MANIFEST.json layout"):
+        I.incremental_update(tiny_files, cfg)
+    assert get_catalog(spark, str(root)).read_commit() is None
