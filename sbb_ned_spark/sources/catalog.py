@@ -17,8 +17,8 @@ TABLE NAME, so swapping storage is a catalog choice, not a code change:
 Durable ER state lives here too, behind one commit point
 (:class:`_CommitPoint`): each stage table is written once as an immutable
 segment (``features__v3``), and one small ``_COMMIT.json`` swapped in with
-``os.replace`` lists the segments that make up the state. It is the only
-place the package renames, replaces or opens files for writing.
+``os.replace`` lists the segments that make up the state. The plans and
+the streaming face write files only through this module.
 
 The reference's analog of this seam is its sqlite DDL + secondary-index
 setup (`/root/reference/qurator/sbb_ned/cli.py:674-681`): a named,
