@@ -29,7 +29,9 @@ share blocking evidence with B — never |A|²:
    the same PARTITION — its labels follow the representative-minimum
    convention, while this function relabels to the global minimum
    (adopted exact-duplicates can undercut every representative), which
-   is what a from-scratch rebuild produces.
+   is what a from-scratch rebuild produces. Compaction folds older
+   increment segments into the new one as a binary counter, so a table
+   lists O(log increments) segments.
 
 Semantics vs a full rebuild: identical whenever the blocking caps don't
 bind differently across the increment (the per-record candidate cap and
@@ -71,8 +73,9 @@ def _committed_state(catalog: TableCatalog, config: PipelineConfig) -> dict | No
     ``config`` and this ``STAGE_FORMAT_VERSION``; None when nothing has been
     resolved yet (no commit, or a first run_pipeline that never reached
     clusters). Any other state fails loudly, before any compute: a commit
-    under another config or format, or the per-stage manifest layout of
-    format 2."""
+    under another config or format, the per-stage manifest layout of
+    format 2, or the unfinished run_pipeline over a resolved state whose
+    commits list no clusters yet."""
     commit = catalog.read_commit()
     if commit is None and catalog.old_layout():
         raise ValueError(
@@ -81,6 +84,11 @@ def _committed_state(catalog: TableCatalog, config: PipelineConfig) -> dict | No
             "rebuild it with run_pipeline"
         )
     if commit is None or "clusters" not in commit["tables"]:
+        if commit and commit["replaces_resolved"]:
+            raise ValueError(
+                f"a run_pipeline over the resolved state under {config.checkpoint_dir!r} "
+                "did not finish (its commit lists no clusters); rerun it"
+            )
         return None
     if commit["config_hash"] != _config_hash(config) or (
         commit["format_version"] != STAGE_FORMAT_VERSION
@@ -219,20 +227,35 @@ def incremental_update(
     # drops the pair-level stages (they describe the old corpus). A crash
     # before the commit leaves the old state whole; the leftover segments
     # are dropped by the next commit.
+    #
+    # Compaction is a binary counter over the ``increments`` committed
+    # since the last full run: after n of them an appended table lists its
+    # base segments plus one segment per set bit of n, so this increment
+    # folds the segments of n's trailing one-bits into its own. A table
+    # then lists at most 1 + log2(n + 1) segments past its base, and a row
+    # is rewritten at most log2(n) times.
     version = commit["version"] + 1
     tables = commit["tables"]
+    n = commit["increments"]
+    fold = (~n & (n + 1)).bit_length() - 1  # the trailing one-bits of n
 
     def segment(df: DataFrame, name: str, partition_by: tuple = ()) -> list[str]:
         seg = segment_name(name, version)
         catalog.write_table(df, seg, partition_by=partition_by)
         return [seg]
 
+    def append(df: DataFrame, name: str, partition_by: tuple = ()) -> list[str]:
+        cut = len(tables[name]) - fold
+        if fold:
+            df = df.unionByName(catalog.read_table(spark, tables[name][cut:]))
+        return tables[name][:cut] + segment(df, name, partition_by)
+
     part_by = ("repo_bucket",) if config.features_partition_buckets else ()
-    new = {"features": tables["features"] + segment(feats_b, "features", part_by)}
+    new = {"features": append(feats_b, "features", part_by)}
     if membership_new is not None:
-        new["exact_groups"] = tables["exact_groups"] + segment(membership_new, "exact_groups")
+        new["exact_groups"] = append(membership_new, "exact_groups")
     new["clusters"] = segment(final, "clusters")
-    catalog.commit(spark, {**commit, "version": version, "tables": new})
+    catalog.commit(spark, {**commit, "version": version, "increments": n + 1, "tables": new})
 
     result_clusters = catalog.read_table(spark, new["clusters"][0])
     # delta frames are localCheckpoint snapshots, not persist()-cached —

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from sbb_ned_spark.config import DEFAULT_CONFIG, PipelineConfig
 from sbb_ned_spark.operators import blocking, clustering, scoring
-from sbb_ned_spark.sources.catalog import get_catalog, segment_name
+from sbb_ned_spark.sources.catalog import ParquetCatalog, get_catalog, segment_name
 
 STAGES = (
     "exact_groups",
@@ -274,13 +274,21 @@ def run_pipeline(
     parquet dirs otherwise) and then committed, the commit listing the
     stages so far and dropping every later one. ``resume=True`` reuses
     the longest prefix of the run's stages that a commit built under the
-    same config and ``STAGE_FORMAT_VERSION`` lists."""
+    same config and ``STAGE_FORMAT_VERSION`` lists. ``metrics.json`` (and,
+    with ``collect_lineage``, the ``lineage`` table) are written under
+    ``checkpoint_dir`` on either backend."""
     spark = files.sparkSession
     root = config.checkpoint_dir
     catalog = get_catalog(spark, root) if root else None
     cfg_hash = _config_hash(config)
     commit = catalog.read_commit() if catalog else None
     version = commit["version"] if commit else 0
+    # a run over a resolved state marks every commit it makes, so a crash
+    # before its clusters commit leaves a state incremental_update refuses
+    # rather than one ingest_batch bootstraps over (dropping the corpus)
+    replaces = bool(catalog and catalog.old_layout()) if commit is None else (
+        commit["replaces_resolved"] or "clusters" in commit["tables"]
+    )
     done: dict[str, list[str]] = {}  # the stages this run's commits list
     if resume and commit and commit["config_hash"] == cfg_hash and (
         commit["format_version"] == STAGE_FORMAT_VERSION
@@ -321,6 +329,8 @@ def run_pipeline(
                 "version": version,
                 "config_hash": cfg_hash,
                 "format_version": STAGE_FORMAT_VERSION,
+                "replaces_resolved": replaces,
+                "increments": 0,  # incremental_update's compaction counter
                 "tables": done,
             })
             df = catalog.read_table(spark, seg)
@@ -408,12 +418,15 @@ def run_pipeline(
     _, scores, clusters = resolve(files, config, stage, finish)
 
     if root:
-        catalog.write_file("metrics.json", json.dumps(metrics, sort_keys=True, indent=1))
+        # metrics and lineage are files under the checkpoint root on both
+        # backends (the Iceberg catalog keeps only stage segments)
+        files_at_root = ParquetCatalog(root)
+        files_at_root.write_file("metrics.json", json.dumps(metrics, sort_keys=True, indent=1))
         if lineage_frames:
             lineage = lineage_frames[0]
             for lf in lineage_frames[1:]:
                 lineage = lineage.unionByName(lf)
-            catalog.write_table(lineage, "lineage")
+            files_at_root.write_table(lineage, "lineage")
 
     return PipelineResult(
         clusters=clusters, scores=scores, metrics=metrics, persisted=persisted

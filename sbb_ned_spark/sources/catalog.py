@@ -63,9 +63,10 @@ class _CommitPoint:
     ``format_version`` and ``tables``, the segment list per table. It is
     written to a temp file and swapped in with ``os.replace``, so a reader
     sees the old commit or the new one, never a torn one; readers read
-    only listed segments, and every commit drops each segment it does not
-    list, including those a crashed attempt left. ``os.replace`` is atomic
-    on a local or POSIX file system only, and the state has one writer."""
+    only listed segments (``read_table`` given a table's segment list),
+    and every commit drops each segment it does not list, including those
+    a crashed attempt left. ``os.replace`` is atomic on a local or POSIX
+    file system only, and the state has one writer."""
 
     def write_file(self, name: str, text: str) -> None:
         """Atomically write a small file next to the commit."""
@@ -97,10 +98,9 @@ class _CommitPoint:
     def read_committed(
         self, spark: SparkSession, table: str, commit: dict | None = None
     ) -> DataFrame:
-        """The union of ``table``'s segments listed in ``commit`` (default:
-        the current one)."""
-        segs = (commit or self.read_commit())["tables"][table]
-        return reduce(DataFrame.unionByName, [self.read_table(spark, s) for s in segs])
+        """``table``'s segments listed in ``commit`` (default: the current
+        one), read as one table."""
+        return self.read_table(spark, (commit or self.read_commit())["tables"][table])
 
     def old_layout(self) -> bool:
         """True for a state of the per-stage manifest layout (format 2),
@@ -135,7 +135,20 @@ class ParquetCatalog(_CommitPoint):
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame:
+    def read_table(self, spark: SparkSession, name: str | list[str]) -> DataFrame:
+        if isinstance(name, list):
+            paths = [self._path(n) for n in name]
+            parted = [p for p in paths if any("=" in e for e in os.listdir(p))]
+            if not parted:
+                # the segments of one state table: ONE scan of all their
+                # paths, the same single FileScan as one directory, however
+                # many increments added a segment
+                return spark.read.parquet(*paths)
+            # Spark infers a partitioning under one root only
+            # (CONFLICTING_DIRECTORY_STRUCTURES), so partitioned segments
+            # are read one scan each; a segment written empty has no
+            # partition directory to infer a schema from and is skipped
+            return reduce(DataFrame.unionByName, map(spark.read.parquet, parted))
         # bare table names resolve to `<root>/<name>` (checkpoint dirs) or
         # `<root>/<name>.parquet` (driver testdata files) — callers address
         # tables by NAME only; the storage layout is the catalog's concern.
@@ -218,8 +231,11 @@ class IcebergCatalog(_CommitPoint):
     def _fqn(self, name: str) -> str:
         return f"{self.catalog}.{self.namespace}.{name}"
 
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.table(self._fqn(name))
+    def read_table(self, spark: SparkSession, name: str | list[str]) -> DataFrame:
+        # a list names the segments of one state table: Iceberg scans one
+        # table at a time, so they are unioned (one scan per segment)
+        names = [name] if isinstance(name, str) else name
+        return reduce(DataFrame.unionByName, [spark.table(self._fqn(n)) for n in names])
 
     def write_table(
         self, df: DataFrame, name: str, mode: str = "overwrite", partition_by: tuple = ()

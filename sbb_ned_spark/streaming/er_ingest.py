@@ -32,12 +32,17 @@ crash anywhere leaves the last committed state whole:
   uncommitted → the replayed batch is resolved again;
 - crash after the state commit, before the offset commit → replay → the
   batch's records are all in the state → no-op;
-- crash during a bootstrap → no commit lists clusters yet → the retry
-  bootstraps again.
+- crash during a bootstrap → its commits list no clusters and replace no
+  resolved state → the retry bootstraps again.
 
 Segments a crashed attempt left are dropped on the retry. What still
 fails loudly is a state this code cannot extend: a commit under another
-config or format, or the old per-stage manifest layout.
+config or format, the old per-stage manifest layout, or the commit of a
+``run_pipeline`` over a resolved state (a rebuild, or a resume after
+increments) that died before its clusters commit. Such a run marks its
+commits as replacing a resolved state, so the batch is not bootstrapped
+over the corpus; rerunning that run (``resume=True``) restores a state
+ingest_batch extends.
 
 The reference has no streaming (SURVEY.md §2.9); its closest shape is
 the resumable `start_iteration` scan loop
@@ -65,8 +70,10 @@ def ingest_batch(batch_df: DataFrame, config: PipelineConfig = DEFAULT_CONFIG) -
     Standalone-callable (and tested) — ``foreachBatch`` is just the
     streaming driver for it. Distinguishes three cases:
 
-    - no commit listing ``clusters`` → bootstrap ``run_pipeline``;
-    - a commit under another config or format, or the old layout → raise
+    - no commit listing ``clusters``, and none of an unfinished run over a
+      resolved state → bootstrap ``run_pipeline``;
+    - a commit under another config or format, the old layout, or an
+      unfinished run over a resolved state → raise
       (``incremental._committed_state``): the fix (a rebuild, or a rerun
       under the original config) is an operator decision;
     - a valid state → drop what a crashed attempt left, drop

@@ -42,6 +42,14 @@ def _assign(clusters) -> dict:
     return {r["record_id"]: r["cluster_id"] for r in clusters.collect()}
 
 
+def _parts(assign: dict) -> set:
+    """The partition a record→cluster map describes, labels ignored."""
+    g = collections.defaultdict(set)
+    for k, v in assign.items():
+        g[v].add(k)
+    return {frozenset(s) for s in g.values()}
+
+
 def _count_layer_calls(monkeypatch) -> collections.Counter:
     calls = collections.Counter()
     for mod, name in _TRACED_LAYERS:
@@ -209,14 +217,7 @@ def test_full_resume_after_increment_reuses_features(spark, tiny_files, tmp_path
     assert "features" not in recomputed and "exact_groups" not in recomputed
     assert "candidate_pairs" in recomputed  # invalidated by the increment
     got = _assign(res.clusters)
-
-    def parts(m):
-        g = collections.defaultdict(set)
-        for k, v in m.items():
-            g[v].add(k)
-        return {frozenset(s) for s in g.values()}
-
-    assert parts(got) == parts(want)
+    assert _parts(got) == _parts(want)
     res.unpersist_all()
 
 
@@ -298,3 +299,69 @@ def test_every_crash_point_recovers_on_retry(spark, tiny_files, tmp_path, monkey
         assert _assign(catalog.read_committed(spark, "clusters")) == want, i
         listed = {s for segs in catalog.read_commit()["tables"].values() for s in segs}
         assert set(catalog.segments(spark)) == listed, i
+
+
+@pytest.mark.parametrize("resume", [True, False], ids=["resume", "rebuild"])
+def test_ingest_refuses_state_of_unfinished_run(spark, tiny_files, tmp_path, monkeypatch, resume):
+    """A run_pipeline over a resolved state (a resume after an increment,
+    or a plain rebuild) that dies after its first commit leaves a commit
+    listing no clusters. The next ingest_batch must refuse it, not
+    bootstrap the batch over the corpus; once that run is rerun, ingests
+    extend the state to the partition of the whole corpus (labels may
+    follow the resumed run's representative minimum, see
+    test_full_resume_after_increment_reuses_features)."""
+    from sbb_ned_spark.sources.catalog import ParquetCatalog
+    from sbb_ned_spark.streaming import er_ingest
+
+    a, rest = _split(tiny_files, 10, 5)
+    b, c = _split(rest, 10, 8)
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
+    er_ingest.ingest_batch(a, cfg)
+    er_ingest.ingest_batch(b, cfg)
+
+    writes = 0
+    write_table = ParquetCatalog.write_table
+
+    def dies_at_second_write(*args, **kwargs):
+        nonlocal writes
+        writes += 1
+        if writes == 2:
+            raise _Crash(writes)
+        return write_table(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetCatalog, "write_table", dies_at_second_write)
+        with pytest.raises(_Crash):
+            P.run_pipeline(a.unionByName(b), cfg, resume=resume)
+    assert "clusters" not in ParquetCatalog(cfg.checkpoint_dir).read_commit()["tables"]
+    with pytest.raises(ValueError, match="did not finish"):
+        er_ingest.ingest_batch(c, cfg)
+
+    P.run_pipeline(a.unionByName(b), cfg, resume=True).unpersist_all()
+    assert er_ingest.ingest_batch(c, cfg)["mode"] == "incremental"
+    full = P.run_pipeline(tiny_files, PipelineConfig())
+    want = _assign(full.clusters)
+    full.unpersist_all()
+    got = ParquetCatalog(cfg.checkpoint_dir).read_committed(spark, "clusters")
+    assert _parts(_assign(got)) == _parts(want)
+
+
+def test_increments_keep_segment_count_logarithmic(spark, tiny_files, tmp_path):
+    """Compaction is a binary counter: after n chained increments the
+    features and membership tables list their base segment plus one
+    segment per set bit of n, the root holds only listed segments, and
+    the clusters equal the full rebuild's."""
+    from sbb_ned_spark.sources.catalog import ParquetCatalog
+
+    h = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(12))
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "st"))
+    P.run_pipeline(tiny_files.filter(h < 5), cfg)
+    cat = ParquetCatalog(cfg.checkpoint_dir)
+    for n in range(1, 8):
+        I.incremental_update(tiny_files.filter(h == 4 + n), cfg)
+        tables = cat.read_commit()["tables"]
+        assert len(tables["features"]) == len(tables["exact_groups"]) == 1 + bin(n).count("1"), n
+        assert set(cat.segments(spark)) == {s for segs in tables.values() for s in segs}, n
+    full = P.run_pipeline(tiny_files, PipelineConfig())
+    assert _assign(cat.read_committed(spark, "clusters")) == _assign(full.clusters)
+    full.unpersist_all()

@@ -208,6 +208,30 @@ def test_parquet_catalog_roundtrip(spark, tmp_path):
     assert cat.read_table(spark, "t2").count() == 10
 
 
+def test_parquet_segments_read_as_one_scan(spark, tmp_path):
+    """A table's listed segments are one FileScan, however many there are
+    (each increment adds one); partitioned segments, which Spark cannot
+    infer under several roots, are unioned, skipping one written empty."""
+    from sbb_ned_spark.sources.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(str(tmp_path))
+    df = spark.range(10).withColumn("b", F.pmod("id", F.lit(2)))
+    segs = [f"t__v{i}" for i in range(1, 6)]
+    for s in segs:
+        cat.write_table(df, s)
+    cat.write_table(df.limit(0), "t__v6")
+    cat.commit(spark, {"version": 6, "tables": {"t": segs + ["t__v6"]}})
+    one = cat.read_committed(spark, "t")
+    assert one.count() == 50
+    assert one._jdf.queryExecution().executedPlan().toString().count("FileScan") == 1
+
+    cat.write_table(df, "p__v7", partition_by=("b",))
+    cat.write_table(df.limit(0), "p__v8", partition_by=("b",))
+    cat.write_table(df.limit(4), "p__v9", partition_by=("b",))
+    parted = cat.read_table(spark, ["p__v7", "p__v8", "p__v9"])
+    assert sorted(parted.columns) == ["b", "id"] and parted.count() == 14
+
+
 def test_iceberg_catalog_roundtrip_when_runtime_present(spark, tmp_path):
     """Exercises the real Iceberg writeTo/PARTITIONED BY path wherever the
     iceberg-spark-runtime jar exists; skipped (not silently passed) in this
