@@ -24,11 +24,13 @@ hyperplane LSH the per-plane collision probability of a pair at angle
 theta is p = 1 - theta/pi, so a b-plane table collides with prob p^b and
 t independent tables reach recall 1-(1-p^b)^t. ``hyperplane_lsh_params``
 inverts that for (tau, target_recall): the largest b (most selective
-buckets -> cheapest join) whose required t fits the table budget.
-Low tau inherently forces wide buckets — at tau 0.5 hyperplane LSH needs
-b=4/t=25 for 99.5% recall; the candidate join degrades toward quadratic,
-which is the correct honest trade (the scale regime for near-dup is
-tau >= 0.9, where b=9/t~20 keeps buckets sharp).
+buckets -> cheapest join) whose required t fits the table budget, up to
+the 31 planes a non-negative ``int`` bucket id holds. Low tau inherently
+forces wide buckets — at tau 0.5 hyperplane LSH needs b=4/t=25 for 99.5%
+recall within 32 tables (b=6/t=58 within 64); the candidate join degrades
+toward quadratic, which is the correct honest trade. The scale regime for
+near-dup is tau >= 0.9, where its 64-table budget keeps buckets sharp:
+b=23/t=59 at tau 0.95 (SCALE.md "Stage 1c" has the candidate counts).
 
 Tables are seeded INDEPENDENTLY (seed+i per table) so raising the table
 count only ever adds candidates — recall is monotone in t, and a pinned
@@ -113,22 +115,30 @@ def brute_force_topk(
     return _top_k(scored, k)
 
 
+# bucket ids are array<int>: 31 sign bits are the most a non-negative
+# int32 holds
+MAX_PLANES = 31
+
+
 def hyperplane_lsh_params(
     min_cos: float, target_recall: float = 0.995, max_tables: int = 32
 ) -> tuple[int, int]:
     """(n_planes, n_tables) such that a pair at cosine ``min_cos`` is
     found with probability >= ``target_recall``: the most selective plane
-    count whose required table count fits ``max_tables``."""
+    count, at most ``MAX_PLANES``, whose required table count fits
+    ``max_tables``. When not even one plane fits, (1, ``max_tables``)."""
     p = 1.0 - math.acos(min(max(min_cos, -1.0), 1.0)) / math.pi
     if p <= 0.0:
         # min_cos = -1: opposite vectors never share a bucket under any
         # plane — the widest bucketing is the only honest answer
         return 1, max_tables
-    for b in range(16, 0, -1):
+    for b in range(MAX_PLANES, 0, -1):
         pb = p**b
         if pb >= 1.0:
-            continue
-        t = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pb))
+            # min_cos = 1: a pair collides in every table
+            return b, 1
+        # log1p: at low p and many planes 1 - pb rounds to 1.0
+        t = math.ceil(math.log(1.0 - target_recall) / math.log1p(-pb))
         if t <= max_tables:
             return b, t
     return 1, max_tables
@@ -370,7 +380,7 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     dim: int = 64,
     target_recall: float = 0.995,
-    max_tables: int = 32,
+    max_tables: int = 64,
     seed: int = 500,
 ) -> DataFrame:
     """Pairs with cosine >= tau, bucket-blocked then exactly verified.

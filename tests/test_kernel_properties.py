@@ -1,7 +1,8 @@
 """Property tests of the fused numpy kernels against small pure-Python
 references: the MinHash band kernel (``hashing.batch_band_sigs``), the
 SimHash vote (``dedup.batch_simhash``) and the winnowing UDF
-(``dedup.winnow_fingerprints``). Drawn rows include empty and None rows
+(``dedup.winnow_fingerprints``) and the hyperplane-LSH bucket UDF
+(``similarity_search.make_hyperplane_buckets_udf``). Drawn rows include empty and None rows
 and slab budgets small enough to spread a batch over many slabs."""
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from sbb_ned_spark.functions import hashing
-from sbb_ned_spark.operators import dedup
+from sbb_ned_spark.operators import dedup, similarity_search
 
 _INT64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 _ROWS = st.lists(st.one_of(st.none(), st.lists(_INT64, max_size=12)), max_size=8)
@@ -99,3 +100,34 @@ def test_winnow_udf_matches_reference(spark, streams, k, w):
     for r in dedup.winnow_fingerprints(df, "doc_id", "text", k=k, w=w).collect():
         got[r["id"]].add(r["fp"])
     assert got == {i: _winnow_reference(s, k, w) for i, s in enumerate(streams)}
+
+
+def _hyperplane_bucket_reference(vec, dim: int, n_planes: int, n_tables: int, seed: int):
+    """Table i's bucket: the sign bits of the vector's projections on the
+    planes of default_rng(seed + i), packed little-endian into an int."""
+    out = []
+    for i in range(n_tables):
+        planes = np.random.default_rng(seed + i).standard_normal((dim, n_planes))
+        bits = (np.asarray(vec, dtype=np.float64) @ planes > 0).astype(np.uint8)
+        out.append(int.from_bytes(np.packbits(bits, bitorder="little").tobytes(), "little"))
+    return out
+
+
+@settings(max_examples=30, derandomize=True, deadline=None)
+@example(vecs=[[1.0] * 6, [0.0] * 6, [-1.0] * 6], n_planes=31, n_tables=3)
+@given(
+    vecs=st.lists(st.lists(st.floats(-4, 4), min_size=6, max_size=6), min_size=1, max_size=8),
+    n_planes=st.sampled_from([1, 16, 31]),
+    n_tables=st.integers(1, 4),
+)
+def test_hyperplane_buckets_udf_matches_bitpack_reference(spark, vecs, n_planes, n_tables):
+    """Bucket ids equal the bit-packed sign pattern; at 31 planes the top
+    sign bit lands in bit 30, so no id overflows the ``array<int>``
+    column into a negative number."""
+    import pandas as pd
+
+    udf = similarity_search.make_hyperplane_buckets_udf(6, n_planes, n_tables, seed=500)
+    got = [list(map(int, row)) for row in udf.func(pd.Series(vecs))]
+    want = [_hyperplane_bucket_reference(v, 6, n_planes, n_tables, 500) for v in vecs]
+    assert got == want
+    assert all(0 <= x < 2**31 for row in got for x in row)

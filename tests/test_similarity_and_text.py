@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from sbb_ned_spark.operators import multimodal as mm
 from sbb_ned_spark.operators import similarity_search as ss
@@ -63,6 +67,38 @@ def test_hyperplane_lsh_params_derivation():
     # recall target monotone in tables at fixed planes/budget
     _, t_99 = ss.hyperplane_lsh_params(0.5, 0.99, 32)
     assert t_99 <= 25
+    # near-dup's shape: 23 planes fit its 64-table budget at tau 0.95
+    assert ss.hyperplane_lsh_params(0.95, 0.995, 64) == (23, 59)
+    # the plane count stops at the widest bucket id an int column holds
+    b_99, t_99 = ss.hyperplane_lsh_params(0.99, 0.995, 64)
+    assert b_99 <= 31 and t_99 <= 64
+
+
+def _lsh_recall(min_cos: float, b: int, t: int) -> float:
+    p = 1.0 - math.acos(min_cos) / math.pi
+    return 1.0 - (1.0 - p**b) ** t
+
+
+@settings(max_examples=300, derandomize=True, deadline=None)
+@example(min_cos=1.0, target=0.995, max_tables=64)
+@example(min_cos=0.95, target=0.995, max_tables=64)
+@example(min_cos=-1.0, target=0.995, max_tables=32)
+@given(
+    min_cos=st.floats(-1.0, 1.0),
+    target=st.floats(0.5, 0.9999),
+    max_tables=st.integers(1, 128),
+)
+def test_hyperplane_lsh_params_property(min_cos, target, max_tables):
+    """The derived shape fits the budget, reaches the target recall at
+    ``min_cos`` (unless it is the (1, max_tables) fallback), and no larger
+    plane count up to 31 reaches the target within the budget."""
+    b, t = ss.hyperplane_lsh_params(min_cos, target, max_tables)
+    assert 1 <= b <= 31 and 1 <= t <= max_tables
+    eps = 1e-12
+    if (b, t) != (1, max_tables):
+        assert _lsh_recall(min_cos, b, t) >= target - eps
+    for wider in range(b + 1, 32):
+        assert _lsh_recall(min_cos, wider, max_tables) < target + eps
 
 
 def _load_vecs(spark, sf):
