@@ -391,12 +391,9 @@ def embedding_near_dup_pairs(
     1.0. On the driver fixtures the derived parameters recover EVERY true
     pair (pinned by a pytest gate vs the brute-force baseline)."""
     n_planes, n_tables = hyperplane_lsh_params(tau, target_recall, max_tables)
-    # snapshot once, as minhash_lsh_pairs does its base: both sides of the
-    # self-join read the stored buckets, so the bucket UDF runs once, not
-    # once for the broadcast build side and again for the probe side
     keyed = _with_table_buckets(
         vectors, id_col, vec_col, dim, n_planes, n_tables, seed, "id_a"
-    ).localCheckpoint(eager=True)
+    )
     cand = posting_pairs(keyed, ["table", "bucket"], combine=True)
     return (
         join_sides(cand, _side(vectors, id_col, vec_col))

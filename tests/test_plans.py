@@ -99,15 +99,6 @@ def test_minhash_lsh_posting_computed_once(spark):
     assert "ArrowEvalPython" not in plan  # UDF lineage lives behind the checkpoint
 
 
-def test_embedding_near_dup_buckets_computed_once(spark):
-    """The (id, table, bucket) rows are localCheckpoint'ed before the
-    self-join: both join sides read the stored rows, so the bucket UDF
-    runs once instead of once per side."""
-    plan = _formatted(spark, em.queries()["embedding_near_dup"](spark, SF))
-    assert "Scan ExistingRDD" in plan
-    assert "ArrowEvalPython" not in plan  # the UDF lineage lives behind the checkpoint
-
-
 def test_ivf_plan_is_cell_join_not_cartesian(spark):
     """The IVF candidate path must be an equi-join on the int cell key
     with Arrow-batched probing — no cross join, no row-at-a-time Python
