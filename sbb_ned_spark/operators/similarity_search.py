@@ -132,13 +132,12 @@ def hyperplane_lsh_params(
         # min_cos = -1: opposite vectors never share a bucket under any
         # plane — the widest bucketing is the only honest answer
         return 1, max_tables
+    if p >= 1.0:
+        # min_cos = 1: a pair collides in every table
+        return MAX_PLANES, 1
     for b in range(MAX_PLANES, 0, -1):
-        pb = p**b
-        if pb >= 1.0:
-            # min_cos = 1: a pair collides in every table
-            return b, 1
-        # log1p: at low p and many planes 1 - pb rounds to 1.0
-        t = math.ceil(math.log(1.0 - target_recall) / math.log1p(-pb))
+        # log1p: at low p and many planes 1 - p**b rounds to 1.0
+        t = math.ceil(math.log(1.0 - target_recall) / math.log1p(-(p**b)))
         if t <= max_tables:
             return b, t
     return 1, max_tables

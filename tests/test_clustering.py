@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+import dataclasses
+from unittest import mock
+
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from sbb_ned_spark.config import PipelineConfig
+from sbb_ned_spark.operators import clustering
 from sbb_ned_spark.operators.clustering import connected_components
 
 
@@ -166,7 +170,9 @@ def _graphs(draw):
 def test_cc_property_matches_union_find(spark, id_codec, graph):
     """On drawn chains, stars, cliques and forests with isolated nodes,
     CC labels equal the union-find minimum-id root, under both id codecs,
-    within cc_max_iterations rounds."""
+    within cc_max_iterations rounds. The star-form stop agrees with
+    running on to the last allowed round: with the check wrapped to
+    report convergence only there, the labels are the same."""
     n, edges = graph
     config = PipelineConfig()
     if id_codec == "string":
@@ -177,12 +183,31 @@ def test_cc_property_matches_union_find(spark, id_codec, graph):
         key = lambda i: i.to_bytes(2, "big").hex()  # noqa: E731
         edge_ids = [(bytes.fromhex(key(x)), bytes.fromhex(key(y))) for x, y in edges]
         schema = "id_a binary, id_b binary"
-    out = connected_components(
-        spark.createDataFrame(edge_ids, schema),
-        spark.createDataFrame([(key(i),) for i in range(n)], "record_id string"),
-        config,
-        id_codec=id_codec,
-    ).collect()
+
+    def labels(cfg):
+        return connected_components(
+            spark.createDataFrame(edge_ids, schema),
+            spark.createDataFrame([(key(i),) for i in range(n)], "record_id string"),
+            cfg,
+            id_codec=id_codec,
+        ).collect()
+
+    out = labels(config)
     want = union_find_min_root(range(n), edges)
     assert {r["record_id"]: r["cluster_id"] for r in out} == {key(i): key(r) for i, r in want.items()}
     assert all(r["n_iter"] <= config.cc_max_iterations for r in out)
+
+    # run two rounds past the star-form stop, and stop only on the last one
+    last = dataclasses.replace(config, cc_max_iterations=max(r["n_iter"] for r in out) + 2)
+    star_form, rounds = clustering._converged_star_form, []
+
+    def converged_on_last_round(cur):
+        rounds.append(cur)
+        return len(rounds) == last.cc_max_iterations and star_form(cur)
+
+    with mock.patch.object(clustering, "_converged_star_form", converged_on_last_round):
+        late = labels(last)
+    assert len(rounds) == last.cc_max_iterations
+    assert {r["record_id"]: r["cluster_id"] for r in late} == {
+        r["record_id"]: r["cluster_id"] for r in out
+    }

@@ -1,15 +1,17 @@
 """Property tests of the fused numpy kernels against small pure-Python
 references: the MinHash band kernel (``hashing.batch_band_sigs``), the
-SimHash vote (``dedup.batch_simhash``) and the winnowing UDF
+SimHash vote (``dedup.batch_simhash``), the winnowing UDF
 (``dedup.winnow_fingerprints``) and the hyperplane-LSH bucket UDF
-(``similarity_search.make_hyperplane_buckets_udf``). Drawn rows include empty and None rows
-and slab budgets small enough to spread a batch over many slabs."""
+(``similarity_search.make_hyperplane_buckets_udf``). Drawn rows include
+empty and None rows and slab budgets small enough to spread a batch over
+many slabs."""
 
 from __future__ import annotations
 
 from hashlib import sha256
 
 import numpy as np
+import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -124,8 +126,6 @@ def test_hyperplane_buckets_udf_matches_bitpack_reference(spark, vecs, n_planes,
     """Bucket ids equal the bit-packed sign pattern; at 31 planes the top
     sign bit lands in bit 30, so no id overflows the ``array<int>``
     column into a negative number."""
-    import pandas as pd
-
     udf = similarity_search.make_hyperplane_buckets_udf(6, n_planes, n_tables, seed=500)
     got = [list(map(int, row)) for row in udf.func(pd.Series(vecs))]
     want = [_hyperplane_bucket_reference(v, 6, n_planes, n_tables, 500) for v in vecs]

@@ -58,7 +58,7 @@ def test_resume_from_checkpoint(spark, tiny_files, tiny_truth, tmp_path):
 
 def test_resume_invalidated_by_config_change(spark, tiny_files, tmp_path):
     """A checkpoint written under different decision settings must NOT be
-    reused: the manifest stores a config hash the resume validates."""
+    reused: the commit stores a config hash the resume validates."""
     root = str(tmp_path / "ckpt")
     P.run_pipeline(tiny_files, PipelineConfig(checkpoint_dir=root))
     # resume with a changed threshold: every stage recomputes (metrics has

@@ -70,8 +70,8 @@ def test_hyperplane_lsh_params_derivation():
     # near-dup's shape: 23 planes fit its 64-table budget at tau 0.95
     assert ss.hyperplane_lsh_params(0.95, 0.995, 64) == (23, 59)
     # the plane count stops at the widest bucket id an int column holds
-    b_99, t_99 = ss.hyperplane_lsh_params(0.99, 0.995, 64)
-    assert b_99 <= 31 and t_99 <= 64
+    b_top, t_top = ss.hyperplane_lsh_params(0.99, 0.995, 64)
+    assert b_top <= 31 and t_top <= 64
 
 
 def _lsh_recall(min_cos: float, b: int, t: int) -> float:
